@@ -11,8 +11,16 @@ extensions) registers here as a named `QuerySpec`:
 
 Conventions enforced suite-wide (driver contract, `__spark_entry__.py`):
 - every computed/aggregate column is aliased IDENTICALLY in fn and oracle;
-- double-typed aggregates are rounded to a fixed scale in BOTH engines so
-  accumulation-order differences can't flip the value hash;
+- double-typed output aggregates are rounded to a fixed scale in BOTH
+  engines, which absorbs accumulation-order noise but cannot settle an
+  exact tie: a double sum whose true mean sits on the rounding boundary
+  lands on either side of it depending on the order of the terms;
+- an intermediate that is rounded and then reused (a mean that feeds a
+  window, a difference or a median) is therefore computed from
+  integer-scaled sums and counts with one half-up division,
+  `(2*s + n) div (2*n)`, with the input quantised first (events.value to
+  integer micro-units, 1e-6); it is divided back to a double only in
+  the output column (suite/behavior.py::q_seasonal_decompose);
 - deterministic ordering for top-k via unique tie-break columns.
 """
 

@@ -22,7 +22,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql.window import WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_64
@@ -1388,6 +1389,36 @@ QUERIES["evt_user_growth"] = QuerySpec(
 )
 
 
+def _half_up_mean(c: Column, w: WindowSpec | None = None) -> Column:
+    """Mean of the non-negative integer column c (over window w, if
+    given) rounded half-up in integer arithmetic, (2*s + n) div (2*n):
+    exact whatever order the engine sums in."""
+    s, n = F.sum(c), F.count(c)
+    if w is not None:
+        s, n = s.over(w), n.over(w)
+    return F.call_function("div", 2 * s + n, 2 * n)
+
+
+def _hourly_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(h, hv): the hourly mean of events.value in integer micro-units.
+    value is quantised to 1e-6 first (exact for its 2 dp), so the mean
+    is one half-up division of an integer sum by a count."""
+    vm = F.round(F.col("value") * 1e6).cast("bigint")
+    return (
+        read_table(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("hour", "ts").alias("h"))
+        .agg(_half_up_mean(vm).alias("hv"))
+    )
+
+
+HOURLY_MICRO_SQL = """hourly AS (
+  SELECT date_trunc('hour', ts) AS h,
+         CAST((2 * sum(vm) + count(vm)) // (2 * count(vm)) AS BIGINT) AS hv
+  FROM (SELECT ts, CAST(round(value * 1e6) AS BIGINT) AS vm FROM events)
+  GROUP BY 1
+)"""
+
+
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive seasonal decomposition of the hourly value series: the
     hour-of-day seasonal component (hod mean − grand mean) plus the
@@ -1397,43 +1428,45 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE hash aggregate reduces the fact table to the hourly
     rollup (bounded by the time span, not the event count); the grand
     mean / hod mean windows and the final aggregate all run on that
-    bounded rollup. Intermediates round to 6 dp so both engines subtract
-    identical doubles."""
-    ev = read_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.round(F.avg("value"), 6).alias("hv")
-    )
+    bounded rollup. Every mean (hv, mu, hm, avg_abs_resid) is kept in
+    integer micro-units as one half-up division of an integer sum by a
+    count, so both engines get the same answer whatever the summation
+    order; rounding a double mean to 6 dp could not, because an exact
+    tie (hod 5's mean is 49.2487435 at sf0.01) lands on either side of
+    the boundary depending on the order of the sum. Output columns are
+    divided by 1e6 only at the end."""
+    hourly = _hourly_micro(spark, sf_dir)
     w_all = Window.partitionBy()
     w_hod = Window.partitionBy(F.hour("h"))
     t = hourly.select(
         F.hour("h").alias("hod"),
         "hv",
-        F.round(F.avg("hv").over(w_all), 6).alias("mu"),
-        F.round(F.avg("hv").over(w_hod), 6).alias("hm"),
+        _half_up_mean(F.col("hv"), w_all).alias("mu"),
+        _half_up_mean(F.col("hv"), w_hod).alias("hm"),
     )
     return t.groupBy("hod").agg(
         F.count(F.lit(1)).alias("n_hours"),
-        F.round(F.first("hm") - F.first("mu"), 6).alias("seasonal"),
-        F.round(F.avg(F.abs(F.col("hv") - F.col("hm"))), 6).alias(
+        ((F.first("hm") - F.first("mu")) / 1e6).alias("seasonal"),
+        (_half_up_mean(F.abs(F.col("hv") - F.col("hm"))) / 1e6).alias(
             "avg_abs_resid"
         ),
     )
 
 
-ORACLE_SEASONAL = """
-WITH hourly AS (
-  SELECT date_trunc('hour', ts) AS h, round(avg(value), 6) AS hv
-  FROM events GROUP BY 1
-),
+ORACLE_SEASONAL = f"""
+WITH {HOURLY_MICRO_SQL},
 t AS (
   SELECT CAST(extract(hour FROM h) AS INT) AS hod, hv,
-         round(avg(hv) OVER (), 6) AS mu,
-         round(avg(hv) OVER (PARTITION BY extract(hour FROM h)), 6) AS hm
+         (2 * sum(hv) OVER () + count(hv) OVER ())
+           // (2 * count(hv) OVER ()) AS mu,
+         (2 * sum(hv) OVER w + count(hv) OVER w) // (2 * count(hv) OVER w) AS hm
   FROM hourly
+  WINDOW w AS (PARTITION BY extract(hour FROM h))
 )
 SELECT hod, count(*) AS n_hours,
-       round(max(hm) - max(mu), 6) AS seasonal,
-       round(avg(abs(hv - hm)), 6) AS avg_abs_resid
+       (max(hm) - max(mu)) / 1e6 AS seasonal,
+       ((2 * sum(abs(hv - hm)) + count(*)) // (2 * count(*))) / 1e6
+         AS avg_abs_resid
 FROM t GROUP BY hod
 """
 
@@ -1790,29 +1823,24 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one fact-table rollup to (hour, avg); residual, MAD,
     and flags all on that bounded series. MAD via two percentile
-    aggregates (median, then median |resid − median|)."""
-    ev = read_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.round(F.avg("value"), 6).alias("hv")
-    )
+    aggregates (median, then median |resid − median|). hv, the hod mean
+    and r are integer micro-units (see q_seasonal_decompose), so each
+    median is an exact half-integer that both engines round alike."""
+    hourly = _hourly_micro(spark, sf_dir)
     w_hod = Window.partitionBy(F.hour("h"))
     resid = hourly.select(
         "h",
         "hv",
-        F.round(F.col("hv") - F.round(F.avg("hv").over(w_hod), 6), 6).alias(
-            "r"
-        ),
+        (F.col("hv") - _half_up_mean(F.col("hv"), w_hod)).alias("r"),
     )
-    stats = resid.agg(
-        F.round(F.percentile("r", F.lit(0.5)), 6).alias("med")
-    )
+    stats = resid.agg(F.round(F.percentile("r", F.lit(0.5))).alias("med"))
     mad = (
         resid.crossJoin(F.broadcast(stats))
         .agg(
             F.round(
-                F.percentile(F.abs(F.col("r") - F.col("med")), F.lit(0.5)), 6
+                F.percentile(F.abs(F.col("r") - F.col("med")), F.lit(0.5))
             ).alias("mad"),
-            F.round(F.first("med"), 6).alias("med"),
+            F.first("med").alias("med"),
         )
     )
     flagged = resid.crossJoin(F.broadcast(mad)).filter(
@@ -1821,32 +1849,30 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return flagged.select(
         F.date_format("h", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        "hv",
-        "r",
+        (F.col("hv") / 1e6).alias("hv"),
+        (F.col("r") / 1e6).alias("r"),
         F.round(
             (F.col("r") - F.col("med")) / (1.4826 * F.col("mad")), 4
         ).alias("robust_z"),
     )
 
 
-ORACLE_SEASONAL_ANOMALIES = """
-WITH hourly AS (
-  SELECT date_trunc('hour', ts) AS h, round(avg(value), 6) AS hv
-  FROM events GROUP BY 1
-),
+ORACLE_SEASONAL_ANOMALIES = f"""
+WITH {HOURLY_MICRO_SQL},
 resid AS (
   SELECT h, hv,
-         round(hv - round(avg(hv) OVER (
-             PARTITION BY extract(hour FROM h)), 6), 6) AS r
+         hv - (2 * sum(hv) OVER w + count(hv) OVER w)
+                // (2 * count(hv) OVER w) AS r
   FROM hourly
+  WINDOW w AS (PARTITION BY extract(hour FROM h))
 ),
-med AS (SELECT round(quantile_cont(r, 0.5), 6) AS med FROM resid),
+med AS (SELECT round(quantile_cont(r, 0.5)) AS med FROM resid),
 mad AS (
-  SELECT round(quantile_cont(abs(r - med), 0.5), 6) AS mad,
-         round(max(med), 6) AS med
+  SELECT round(quantile_cont(abs(r - med), 0.5)) AS mad, max(med) AS med
   FROM resid, med
 )
-SELECT strftime(resid.h, '%Y-%m-%d %H:%M:%S') AS hour, resid.hv, resid.r,
+SELECT strftime(resid.h, '%Y-%m-%d %H:%M:%S') AS hour,
+       resid.hv / 1e6 AS hv, resid.r / 1e6 AS r,
        round((resid.r - mad.med) / (1.4826 * mad.mad), 4) AS robust_z
 FROM resid, mad
 WHERE abs(resid.r - mad.med) > 3 * 1.4826 * mad.mad
