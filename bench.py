@@ -289,8 +289,6 @@ HEADLINE = [
     "doc_kneser_ney_logprob",
     "doc_bloom_decontam_gate",
     "doc_gif_anim_probe",
-    "doc_h264_iframe_probe",
-    "doc_h264_gop_probe",
     "emb_matryoshka_recall",
     "doc_ccnet_buckets",
     "doc_line_dedup",
@@ -298,14 +296,6 @@ HEADLINE = [
     "doc_doremi_weights",
     "doc_unigram_train",
     "doc_unigram_encode",
-    "doc_h264_bframe_probe",
-    "doc_h264_chroma_probe",
-    "doc_h264_tdirect_probe",
-    "doc_h264_wpred_probe",
-    "doc_h264_multiref_probe",
-    "doc_h264_i16_probe",
-    "doc_h264_bwpred_probe",
-    "doc_h264_ibb_probe",
     "emb_cluster_sample",
     "doc_tokenizer_fertility",
     # round-7 additions

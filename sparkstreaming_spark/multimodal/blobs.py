@@ -236,7 +236,8 @@ MAGIC_PREFIXES: list[tuple[str, bytes]] = [
     ("image/png", b"\x89PNG\r\n\x1a\n"),
     ("image/jpeg", b"\xff\xd8\xff"),
     # Annex-B H.264 elementary stream opening with an SPS NAL (the
-    # shape multimodal/h264.py emits and any raw .264 dump starts with)
+    # shape multimodal/h264.py::encode_iframe emits and any raw .264
+    # dump starts with)
     ("video/h264", b"\x00\x00\x00\x01\x67"),
 ]
 

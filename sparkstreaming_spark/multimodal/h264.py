@@ -1,11 +1,10 @@
-"""Clean-room pure-Python H.264 baseline codec: IDR I-frames AND
-motion-compensated P frames (the former "inter codecs" stub in
-video.py). Implements the real coding stack per ITU-T H.264 (public
-spec): CAVLC entropy coding (coeff_token / level prefix-suffix with
-escapes / total_zeros / run_before), 4x4 integer transform with the
-standard MF/V quantization tables, Intra_4x4 spatial prediction,
-quarter-pel motion compensation, and a conformant NAL/SPS/PPS/
-slice-header bitstream (Annex-B), paired encoder + decoder.
+"""Clean-room pure-Python H.264 baseline intra codec: one IDR I-frame
+per stream, paired encoder + decoder. Implements the real coding stack
+per ITU-T H.264 (public spec): CAVLC entropy coding (coeff_token /
+level prefix-suffix with escapes / total_zeros / run_before), 4x4
+integer transform with the standard MF/V quantization tables, intra
+prediction, and a conformant NAL/SPS/PPS/slice-header bitstream
+(Annex-B).
 
 Scope (precise, honestly guarded):
 - encoder: one IDR I-slice per frame, each macroblock the cheaper of
@@ -20,93 +19,21 @@ Scope (precise, honestly guarded):
   the raw macroblock (entropy-defeating noise at very low qp), I_PCM
   (mb_type 25: pcm alignment + the samples verbatim, losslessly) —
   full luma residual coding (CBP luma = 15 for I_4x4), and REAL 4:2:0
-  chroma
-  residual coding: §8.3.4 DC chroma prediction (per-4x4 availability
-  rules) plus the §8.5.11 chroma DC path (2x2 Hadamard, Table 8-15
-  QPc, the nC = -1 coeff_token and Table 9-9(a) total_zeros chroma DC
-  CAVLC tables) and 15-coefficient chroma AC blocks — CBP chroma
-  0/1/2 signaled through the full 48-entry Table 9-4 mapping.
-  Deblocking disabled in the slice header
+  chroma residual coding: §8.3.4 DC chroma prediction (per-4x4
+  availability rules) plus the §8.5.11 chroma DC path (2x2 Hadamard,
+  Table 8-15 QPc, the nC = -1 coeff_token and Table 9-9(a)
+  total_zeros chroma DC CAVLC tables) and 15-coefficient chroma AC
+  blocks — CBP chroma 0/1/2 signaled through the full 48-entry
+  Table 9-4 mapping. Deblocking disabled in the slice header
   (disable_deblocking_filter_idc=1 — decoding without a deblocking
   pass is then conformant), fixed QP per frame.
-- decoder: parses SPS/PPS/IDR slices produced by this encoder and any
-  stream within the same feature envelope; raises NotImplementedError
-  with a precise reason for CABAC or the 8x8 transform — those stay
-  honest stubs, not silent wrong output.
-- inter coding (P slices): encode_gop/decode_stream extend the
-  envelope with motion-compensated P frames — the COMPLETE P
-  partition tree: P_L0_16x16, P_L0_L0_16x8, P_L0_L0_8x16, and P_8x8
-  with every Table 7-17 sub_mb_type (8x8 / 8x4 / 4x8 / 4x4
-  sub-partitions, chosen per quadrant from the shared integer scan's
-  per-4x4-block SAD grid) plus P_Skip against a
-  single reference (the previous decoded frame, max_num_ref_frames=1
-  sliding window) — or, via encode_gop_multiref, against TWO active
-  references (active_l0=2 PPS, per-partition te(v) ref_idx_l0 per
-  §7.3.5.1/.2 — one per 8x8 quadrant in P_8x8 — with the §8.4.1.3.1
-  same-refIdx MV prediction, refIdx-0-gated P_Skip zero conditions,
-  and a slice-header active override on the first P while the DPB
-  holds one frame), chroma riding each partition's luma MV through the
-  §8.4.2.2.2 eighth-pel bilinear interpolation with the full inter
-  chroma residual (P_Skip requires a zero chroma residual too),
-  full quarter-pel luma interpolation per §8.4.2.2.1
-  (6-tap [1,-5,20,20,-5,1] half-pel, bilinear quarter, coordinate
-  clamping at picture edges), the §8.4.1.3 MV prediction at 4x4
-  granularity (median plus the §8.4.1.3.2 directional rules for 16x8 /
-  8x16 partitions, C→D substitution on existence) with the P_Skip
-  zero-MV conditions, mb_skip_run coding, and the Inter
-  coded_block_pattern mapping (Table 9-4).
-- B slices (encode_gop_b): low-delay generalized B — B_Skip and
-  B_Direct_16x16 in SPATIAL direct mode (§8.4.1.2.2: per-list refIdx
-  from neighbor usage, median MV, and per-8x8-quadrant colZeroFlag
-  from the colocated CORNER 4x4 blocks of L1[0] under
-  direct_8x8_inference — each reference's 4x4-granular motion field
-  rides the DPB), plus B_L0/B_L1/B_Bi 16x16 against the two most
-  recent PAST references (the conformant default list init for that
-  DPB), default bi-prediction (§8.4.2.3 (p0+p1+1)>>1), per-list median
-  MV prediction, Main-profile SPS, non-reference B NALs, plus the
-  COMPLETE two-partition B mode family (Table 7-14 types 4-21:
-  single-list, mixed-list, and Bi 16x8/8x16 partitions, list-major
-  MVD layout per §7.3.5.1 with per-list interleaved MV prediction),
-  plus B_8x8 (type 22) with the COMPLETE Table 7-18 sub_mb_type set:
-  B_Direct_8x8 (the MB's spatial or temporal direct motion applied
-  per quadrant), B_L0/B_L1/B_Bi 8x8, and the sub-split modes 4-12
-  (L0/L1/Bi x 8x4/4x8/4x4, per-sub-partition MVs under the generic
-  §8.4.1.3 median MVP at sub-partition geometry).
-  Chroma is
-  fully coded in B slices too (per-quadrant direct motion, §8.4.2.3
-  bi-averaged chroma MC, inter chroma residual; B_Skip additionally
-  requires the chroma residual to quantize to zero).
-- temporal direct (encode_gop_temporal): classic display-REORDERED
-  IBP — or, with n_b=2, IbbP — GOPs: poc_type-0 SPS with explicit
-  pic_order_cnt_lsb (§8.2.1.1 derivation incl. wraparound),
-  POC-ordered default B lists with a FUTURE RefPicList1[0], and
-  §8.4.1.2.3 temporal direct (per-quadrant mvCol from the colocated
-  corner blocks under direct_8x8_inference, mvL0 =
-  (DistScaleFactor*mvCol + 128) >> 8, mvL1 = mvL0 - mvCol, always
-  bi-predicted — each B carrying its own POC-distance scale factor);
-  decode_stream returns decode-order frames plus per-frame POCs. The
-  derivation requires refPicCol == RefPicList0[0] (always true in
-  this GOP's geometry — guarded, not assumed).
-  implicit_weights=True adds IMPLICIT weighted bi-prediction
-  (weighted_bipred_idc=2): §8.4.2.3.1 weights w1 = DistScaleFactor
-  >> 2, w0 = 64 - w1 at logWD 5 — derived from the POC distances on
-  BOTH sides, nothing transmitted; bi predictions run the weighted
-  op, uni predictions stay plain, and midpoint Bs derive the trivial
-  (32, 32).
-- explicit weighted prediction (encode_gop_weighted): P slices with
-  weighted_pred_flag=1, the §7.3.3.2 pred_weight_table (per-plane
-  weight/offset for L0[0], absent flags falling back to the 2^logWD
-  identity), and the §8.4.2.3.2 sample op applied to every P inter
-  prediction including P_Skip — global fades collapse to skip rows.
-  Weights are estimated per plane by least squares (fade model).
-- explicit weighted BI-prediction (encode_gop_b_weighted):
-  weighted_bipred_idc=1 PPS, the §7.3.3.2 pred_weight_table for BOTH
-  lists, and the §8.4.2.3.2 weighted uni/bi sample ops on every B
-  prediction including B_Skip/B_Direct — a global fade collapses to
-  skip/direct rows in B slices too. CABAC remains the one honest
-  NotImplementedError guard in the prediction/entropy toolset (with
-  the structural envelope bounds: one slice per picture, frame_mbs
-  only, no 8x8 transform / High profile).
+- decoder (decode_iframe): parses SPS/PPS and the first IDR slice of
+  any stream within the same feature envelope; raises
+  NotImplementedError with a precise reason for P/B slices, CABAC,
+  High profile (8x8 transform), interlace, cropping, slice groups or
+  deblocking — honest stubs, not silent wrong output. Malformed input
+  raises ValueError; a forged SPS beyond 8192x8192 is rejected before
+  any frame allocation.
 
 Verification stance: bit-exact ROUND-TRIP is the contract — the
 decoder must reproduce the encoder's own reconstruction exactly
@@ -119,19 +46,8 @@ test). External conformance vectors are not bundled in this
 environment; that caveat is documented here rather than papered over.
 
 Reference parity: the reference repo has no video path (three CSV
-jobs); this is north-star multimodal extension work. Spark plumbing:
-suite/platform_ops.py::q_h264_iframe_probe (Arrow mapInPandas,
-embarrassingly parallel).
-
-SCOPE CLOSED (round 9): this codec surface is COMPLETE for the north
-star — frame/GOP extraction, I/P/B with the full partition trees,
-4:2:0 chroma, multiref, weighted and temporal/spatial direct
-prediction cover everything a training-data curation pass needs from
-video blobs (frame sampling, metadata triage, per-frame features).
-CABAC and the 8x8 transform stay honest NotImplementedError guards
-(their init tables are not reproducible from memory and a curation
-pipeline never needs them). No further prediction paths or partition
-modes will be added; codec budget goes to pipeline breadth instead.
+jobs). Spark plumbing: suite/platform_ops.py::q_multimodal_ingest
+decodes the video/h264 blobs of its mixed binary column.
 """
 
 from __future__ import annotations
@@ -159,10 +75,6 @@ class BitWriter:
 
     def se(self, v: int) -> None:
         self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def te1(self, v: int) -> None:
-        """te(v) with range [0, 1] (§9.1.1): one inverted bit."""
-        self.bits.append(1 - v)
 
     def bitstring(self, s: str) -> None:
         for c in s:
@@ -220,11 +132,6 @@ class BitReader:
     def se(self) -> int:
         k = self.ue()
         return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def te1(self) -> int:
-        """te(v) with range [0, 1] (§9.1.1): one INVERTED bit — the
-        ref_idx coding when exactly two references are active."""
-        return 1 - self.bit()
 
 
 def strip_emulation(rbsp: bytes) -> bytes:
@@ -579,6 +486,12 @@ def decode_residual_block(r: BitReader, nc: int,
         out = np.zeros((4, 4), dtype=np.int64)
     if total_coeff == 0:
         return out, 0
+    # untrusted-blob hardening: a corrupt coeff_token / total_zeros /
+    # run_before may name more coefficients or zeros than the block
+    # holds — an invalid bitstream (ValueError), never an IndexError or
+    # a wrapped negative scan index
+    if t1 > total_coeff or total_coeff > max_coeff:
+        raise ValueError("coeff_token exceeds the block size")
     levels: list[int] = []
     for _ in range(t1):
         levels.append(-1 if r.bit() else 1)
@@ -619,6 +532,8 @@ def decode_residual_block(r: BitReader, nc: int,
         )
     else:
         total_zeros = 0
+    if total_zeros + total_coeff > max_coeff:
+        raise ValueError("total_zeros exceeds the block size")
     runs = []
     zeros_left = total_zeros
     for _ in range(total_coeff - 1):
@@ -626,6 +541,8 @@ def decode_residual_block(r: BitReader, nc: int,
             run = _read_vlc(
                 r, _RUN_BEFORE_DEC[min(zeros_left, 7)], "run_before"
             )
+            if run > zeros_left:
+                raise ValueError("run_before exceeds zeros left")
         else:
             run = 0
         runs.append(run)
@@ -690,16 +607,13 @@ def inverse_transform_4x4(d: np.ndarray) -> np.ndarray:
     return (h + 32) >> 6
 
 
-def quantize_4x4(w: np.ndarray, qp: int, intra: bool = True) -> np.ndarray:
+def quantize_4x4(w: np.ndarray, qp: int) -> np.ndarray:
     mf_row = _MF[qp % 6]
     mf = np.array(mf_row, dtype=np.int64)[_POS_CLASS.ravel()].reshape(4, 4)
     qbits = 15 + qp // 6
-    # reference-encoder deadzones (JM): intra f = 2^qbits/3, inter
-    # f = 2^qbits/6 — inter residuals carry MC noise, so the smaller
-    # deadzone zeroes them more aggressively (fewer residual bits).
-    # Round-trip bit-exactness is unaffected either way (the decoder
-    # only ever sees the levels).
-    f = (1 << qbits) // (3 if intra else 6)
+    # reference-encoder (JM) intra deadzone f = 2^qbits/3 — encoder
+    # policy only: the decoder only ever sees the levels
+    f = (1 << qbits) // 3
     sign = np.sign(w)
     return sign * ((np.abs(w) * mf + f) >> qbits)
 
@@ -712,7 +626,7 @@ def dequantize_4x4(levels: np.ndarray, qp: int) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # chroma: QPc mapping, 2x2 DC Hadamard (§8.5.11), DC intra prediction
-# (§8.3.4 mode 0), eighth-pel MC (§8.4.2.2.2)
+# (§8.3.4 mode 0)
 
 # Table 8-15: qPI -> QPc (chroma_qp_index_offset = 0 in our PPS)
 _QPC = list(range(30)) + [29, 30, 31, 32, 32, 33, 34, 34, 35, 35, 36, 36,
@@ -731,14 +645,13 @@ def chroma_dc_forward(dc2: np.ndarray) -> np.ndarray:
     return _H2 @ dc2.astype(np.int64) @ _H2
 
 
-def quantize_chroma_dc(fdc: np.ndarray, qpc: int,
-                       intra: bool = True) -> np.ndarray:
+def quantize_chroma_dc(fdc: np.ndarray, qpc: int) -> np.ndarray:
     """Encoder-side chroma DC quantization (JM-style: the 4x4 MF at
     position (0,0) with a doubled deadzone and one extra shift for the
     Hadamard gain — encoder policy only, any levels are conformant)."""
     mf = _MF[qpc % 6][0]
     qbits = 15 + qpc // 6
-    f = (1 << qbits) // (3 if intra else 6)
+    f = (1 << qbits) // 3
     sign = np.sign(fdc)
     return sign * ((np.abs(fdc) * mf + 2 * f) >> (qbits + 1))
 
@@ -884,134 +797,13 @@ def _chroma_dc_pred8(plane: np.ndarray, y: int, x: int) -> np.ndarray:
     return pred
 
 
-def _mc_chroma(refc: np.ndarray, y0: int, x0: int, mv: tuple[int, int],
-               size: int | tuple[int, int] = 8) -> np.ndarray:
-    """Eighth-pel bilinear chroma interpolation (§8.4.2.2.2) for a
-    block at chroma coords (y0, x0). `mv` is the LUMA quarter-pel MV —
-    at 4:2:0 one luma quarter-pel is one chroma eighth-pel, so the
-    same integer applies directly. Out-of-picture samples clamp."""
-    sy, sx = (size, size) if isinstance(size, int) else size
-    h, w_ = refc.shape
-    mvx, mvy = int(mv[0]), int(mv[1])
-    xf, yf = mvx & 7, mvy & 7
-    y_int, x_int = y0 + (mvy >> 3), x0 + (mvx >> 3)
-    if xf == 0 and yf == 0:
-        if 0 <= y_int and y_int + sy <= h and 0 <= x_int and x_int + sx <= w_:
-            return refc[y_int : y_int + sy, x_int : x_int + sx].astype(
-                np.int64)
-        rows = np.clip(np.arange(y_int, y_int + sy), 0, h - 1)
-        cols = np.clip(np.arange(x_int, x_int + sx), 0, w_ - 1)
-        return refc[np.ix_(rows, cols)].astype(np.int64)
-    rows = np.clip(np.arange(y_int, y_int + sy + 1), 0, h - 1)
-    cols = np.clip(np.arange(x_int, x_int + sx + 1), 0, w_ - 1)
-    win = refc[np.ix_(rows, cols)].astype(np.int64)
-    a = win[:sy, :sx]
-    b = win[:sy, 1:]
-    c = win[1:, :sx]
-    d = win[1:, 1:]
-    return ((8 - xf) * (8 - yf) * a + xf * (8 - yf) * b
-            + (8 - xf) * yf * c + xf * yf * d + 32) >> 6
-
 
 # chroma 4x4 sub-block raster order within the 8x8 MB block (§6.4.7)
 CHROMA_BLOCK_XY = [(0, 0), (4, 0), (0, 4), (4, 4)]
 
 
-def _apply_weight(pred: np.ndarray, w: int, o: int,
-                  logwd: int) -> np.ndarray:
-    """Explicit weighted-prediction sample op (§8.4.2.3.2,
-    unidirectional): Clip1(((pred*w + 2^(logWD-1)) >> logWD) + o)."""
-    if logwd >= 1:
-        return np.clip(((pred * w + (1 << (logwd - 1))) >> logwd) + o,
-                       0, 255)
-    return np.clip(pred * w + o, 0, 255)
 
-
-def _wp_bi(p0: np.ndarray, p1: np.ndarray, w0: int, o0: int, w1: int,
-           o1: int, logwd: int) -> np.ndarray:
-    """Explicit weighted BI-prediction sample op (§8.4.2.3.2):
-    Clip1(((p0*w0 + p1*w1 + 2^logWD) >> (logWD+1)) + ((o0+o1+1)>>1))."""
-    return np.clip(
-        ((p0 * w0 + p1 * w1 + (1 << logwd)) >> (logwd + 1))
-        + ((o0 + o1 + 1) >> 1), 0, 255)
-
-
-def _bi_chroma(c0: np.ndarray, c1: np.ndarray, u0: bool, u1: bool,
-               m0, m1, cy: int, cx: int, size=8, wp=None) -> np.ndarray:
-    """Chroma twin of the B-slice luma predictor: §8.4.2.3 default
-    bi-averaging when both lists are in use, else the one used list.
-    `wp` = ((w0, o0), (w1, o1), logWD) applies the §8.4.2.3.2 explicit
-    weighted op instead (weighted_bipred_idc = 1); a 4th element "bi"
-    marks IMPLICIT weighting (idc = 2), which weights only the
-    bi-predicted case — uni predictions stay plain per §8.4.2.3.1."""
-    if u0 and u1:
-        if wp is not None:
-            (w0, o0), (w1, o1), lwd = wp[0], wp[1], wp[2]
-            return _wp_bi(_mc_chroma(c0, cy, cx, m0, size),
-                          _mc_chroma(c1, cy, cx, m1, size),
-                          w0, o0, w1, o1, lwd)
-        return (_mc_chroma(c0, cy, cx, m0, size)
-                + _mc_chroma(c1, cy, cx, m1, size) + 1) >> 1
-    if u0:
-        p = _mc_chroma(c0, cy, cx, m0, size)
-        if wp is not None and len(wp) == 3:
-            return _apply_weight(p, wp[0][0], wp[0][1], wp[2])
-        return p
-    p = _mc_chroma(c1, cy, cx, m1, size)
-    if wp is not None and len(wp) == 3:
-        return _apply_weight(p, wp[1][0], wp[1][1], wp[2])
-    return p
-
-
-def _bi_luma(r0: np.ndarray, r1: np.ndarray, u0: bool, u1: bool,
-             m0, m1, y: int, x: int, size=16, wp=None) -> np.ndarray:
-    """B-slice luma partition predictor: §8.4.2.3 default bi-averaging
-    when both lists are in use, else the one used list. `wp` =
-    ((w0, o0), (w1, o1), logWD) applies the §8.4.2.3.2 explicit
-    weighted op instead (weighted_bipred_idc = 1); a 4th element "bi"
-    marks IMPLICIT weighting (idc = 2), which weights only the
-    bi-predicted case — uni predictions stay plain per §8.4.2.3.1."""
-    if u0 and u1:
-        if wp is not None:
-            (w0, o0), (w1, o1), lwd = wp[0], wp[1], wp[2]
-            return _wp_bi(_mc_luma(r0, y, x, m0, size),
-                          _mc_luma(r1, y, x, m1, size),
-                          w0, o0, w1, o1, lwd)
-        return (_mc_luma(r0, y, x, m0, size)
-                + _mc_luma(r1, y, x, m1, size) + 1) >> 1
-    if u0:
-        p = _mc_luma(r0, y, x, m0, size)
-        if wp is not None and len(wp) == 3:
-            return _apply_weight(p, wp[0][0], wp[0][1], wp[2])
-        return p
-    p = _mc_luma(r1, y, x, m1, size)
-    if wp is not None and len(wp) == 3:
-        return _apply_weight(p, wp[1][0], wp[1][1], wp[2])
-    return p
-
-
-def _direct_chroma(c0: np.ndarray, c1: np.ndarray, u0: bool, u1: bool,
-                   dmv0, dmv1, zq: np.ndarray, cy: int,
-                   cx: int, wp=None) -> np.ndarray:
-    """Chroma prediction for a spatial-direct B MB: each 8x8 luma
-    quadrant is a 4x4 chroma quadrant, zeroed per its colZeroFlag —
-    identical structure to the luma direct predictor."""
-    if zq.all():
-        return _bi_chroma(c0, c1, u0, u1, (0, 0), (0, 0), cy, cx, 8, wp)
-    if not zq.any():
-        return _bi_chroma(c0, c1, u0, u1, dmv0, dmv1, cy, cx, 8, wp)
-    out = np.empty((8, 8), dtype=np.int64)
-    for qy in range(2):
-        for qx in range(2):
-            m0 = (0, 0) if zq[qy, qx] else dmv0
-            m1 = (0, 0) if zq[qy, qx] else dmv1
-            out[4 * qy : 4 * qy + 4, 4 * qx : 4 * qx + 4] = _bi_chroma(
-                c0, c1, u0, u1, m0, m1, cy + 4 * qy, cx + 4 * qx, 4, wp)
-    return out
-
-
-def _quantize_chroma_mb(res_cb: np.ndarray, res_cr: np.ndarray, qpc: int,
-                        intra: bool):
+def _quantize_chroma_mb(res_cb: np.ndarray, res_cr: np.ndarray, qpc: int):
     """Transform + quantize the two 8x8 chroma residuals of one MB.
     → (cbp_chroma, {comp: dc_levels (2,2)}, {comp: [ac_levels x4]})
     where cbp_chroma is 0 (nothing), 1 (DC only) or 2 (DC + AC); when
@@ -1033,12 +825,12 @@ def _quantize_chroma_mb(res_cb: np.ndarray, res_cr: np.ndarray, qpc: int,
         for bi, (bx, by) in enumerate(CHROMA_BLOCK_XY):
             wt = forward_transform_4x4(res[by : by + 4, bx : bx + 4])
             dc2[by // 4, bx // 4] = wt[0, 0]
-            lv = quantize_4x4(wt, qpc, intra=intra)
+            lv = quantize_4x4(wt, qpc)
             lv[0, 0] = 0
             ac4.append(lv)
             if lv.any():
                 any_ac = True
-        dcq = quantize_chroma_dc(chroma_dc_forward(dc2), qpc, intra=intra)
+        dcq = quantize_chroma_dc(chroma_dc_forward(dc2), qpc)
         if dcq.any():
             any_dc = True
         dcs[comp] = dcq
@@ -1349,32 +1141,31 @@ CBP_INTRA = [47, 31, 15, 0, 23, 27, 29, 30, 7, 11, 13, 14, 39, 43, 45, 46,
 _CBP_INTRA_INV = {cbp: i for i, cbp in enumerate(CBP_INTRA)}
 
 
+def _cbp_lookup(table, code: int) -> int:
+    # untrusted-blob hardening: Table 9-4 has 48 rows; a larger codeNum
+    # is an invalid bitstream (documented ValueError), not an IndexError
+    if code >= len(table):
+        raise ValueError(f"invalid coded_block_pattern codeNum {code}")
+    return table[code]
+
+
 # ---------------------------------------------------------------------------
 # headers
 
 
-_POC_LSB_BITS = 8  # log2_max_pic_order_cnt_lsb when poc_type 0
-
-
-def _build_sps_rbsp(width: int, height: int, max_refs: int = 1,
-                    profile: int = 66, poc_type: int = 2) -> bytes:
-    """profile 66 (baseline) for I/P streams; B slices require Main
-    (77) and a 2-frame DPB (max_refs=2). poc_type 2 pins display order
-    to decoding order (the low-delay GOPs); the display-reordered
-    temporal-direct GOP uses poc_type 0 (explicit pic_order_cnt_lsb
-    per slice, §8.2.1.1)."""
+def _build_sps_rbsp(width: int, height: int) -> bytes:
+    """Baseline profile (66); poc_type 2 pins display order to decoding
+    order, which is all a single-frame stream needs."""
     if width % 16 or height % 16:
         raise ValueError("dimensions must be multiples of 16 in this scope")
     w = BitWriter()
-    w.u(profile, 8)  # profile_idc
+    w.u(66, 8)   # profile_idc
     w.u(0, 8)    # constraint flags
     w.u(30, 8)   # level_idc
     w.ue(0)      # sps id
     w.ue(0)      # log2_max_frame_num_minus4
-    w.ue(poc_type)
-    if poc_type == 0:
-        w.ue(_POC_LSB_BITS - 4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(max_refs)  # max_num_ref_frames
+    w.ue(2)      # pic_order_cnt_type
+    w.ue(1)      # max_num_ref_frames
     w.u(0, 1)    # gaps_in_frame_num
     w.ue(width // 16 - 1)
     w.ue(height // 16 - 1)
@@ -1385,19 +1176,17 @@ def _build_sps_rbsp(width: int, height: int, max_refs: int = 1,
     return w.rbsp()
 
 
-def _build_pps_rbsp(weighted_pred: bool = False,
-                    active_l0: int = 1,
-                    weighted_bipred: bool = False) -> bytes:
+def _build_pps_rbsp() -> bytes:
     w = BitWriter()
     w.ue(0)      # pps id
     w.ue(0)      # sps id
     w.u(0, 1)    # entropy_coding_mode = CAVLC
     w.u(0, 1)    # bottom_field_pic_order_in_frame_present
     w.ue(0)      # num_slice_groups_minus1
-    w.ue(active_l0 - 1)  # num_ref_idx_l0_default_active_minus1
+    w.ue(0)      # num_ref_idx_l0_default_active_minus1
     w.ue(0)      # num_ref_idx_l1_default_active_minus1
-    w.u(1 if weighted_pred else 0, 1)  # weighted_pred (P explicit WP)
-    w.u(int(weighted_bipred), 2)  # weighted_bipred_idc (True -> 1)
+    w.u(0, 1)    # weighted_pred_flag
+    w.u(0, 2)    # weighted_bipred_idc
     w.se(0)      # pic_init_qp_minus26
     w.se(0)      # pic_init_qs_minus26
     w.se(0)      # chroma_qp_index_offset
@@ -1407,8 +1196,9 @@ def _build_pps_rbsp(weighted_pred: bool = False,
     return w.rbsp()
 
 
-def _nal(nal_type: int, rbsp: bytes, ref_idc: int = 3) -> bytes:
-    return b"\x00\x00\x00\x01" + bytes([(ref_idc << 5) | nal_type]) + rbsp
+def _nal(nal_type: int, rbsp: bytes) -> bytes:
+    """Annex-B start code + NAL header with nal_ref_idc 3."""
+    return b"\x00\x00\x00\x01" + bytes([(3 << 5) | nal_type]) + rbsp
 
 
 # ---------------------------------------------------------------------------
@@ -1465,8 +1255,6 @@ def _to_yuv(img: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
                   cr_plane: np.ndarray, qp: int,
-                  poc_lsb: int | None = None,
-                  stats: dict | None = None,
                   ) -> tuple[tuple[np.ndarray, np.ndarray, np.ndarray],
                              bytes]:
     """Encode one IDR I slice. Every MB picks the cheaper of I_4x4
@@ -1474,8 +1262,7 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
     I_16x16 (§8.3.3 V/H/DC/Plane whole-MB prediction with the §8.5.10
     luma DC Hadamard path, mb_type jointly coding the prediction mode
     and both CBPs per Table 7-11) — smooth macroblocks collapse to a
-    handful of I_16x16 bits. `stats` (optional out-param) gains
-    n_i16 / n_i4 counts."""
+    handful of I_16x16 bits."""
     h, w_ = y_plane.shape
     if h % 16 or w_ % 16:
         raise ValueError("dimensions must be multiples of 16 in this scope")
@@ -1489,8 +1276,6 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
     w.ue(0)            # pps id
     w.u(0, 4)          # frame_num (log2_max_frame_num = 4)
     w.ue(0)            # idr_pic_id
-    if poc_lsb is not None:  # SPS poc_type 0 (§7.3.3)
-        w.u(poc_lsb & ((1 << _POC_LSB_BITS) - 1), _POC_LSB_BITS)
     # dec_ref_pic_marking (present: IDR with nal_ref_idc != 0, §7.3.3.3)
     w.u(0, 1)          # no_output_of_prior_pics_flag
     w.u(0, 1)          # long_term_reference_flag
@@ -1508,11 +1293,6 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
     tc_cb = np.zeros((h // 8, w_ // 8), dtype=np.int64)
     tc_cr = np.zeros((h // 8, w_ // 8), dtype=np.int64)
     qpc = chroma_qp(qp)
-    if stats is None:
-        stats = {}
-    stats.setdefault("n_i16", 0)
-    stats.setdefault("n_i4", 0)
-    stats.setdefault("n_pcm", 0)
     # I_16x16-vs-I_4x4 deadband: I_4x4 spends ~16 extra mode-signal
     # bits plus typically more coded residual blocks, so its SAD win
     # must clear a qp-scaled margin (~48 SAD per qp double-step —
@@ -1584,9 +1364,7 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
             pred_cr = _chroma_dc_pred8(rec_cr, cy, cx)
             cc, dcs, acs = _quantize_chroma_mb(
                 src_cb[cy : cy + 8, cx : cx + 8] - pred_cb,
-                src_cr[cy : cy + 8, cx : cx + 8] - pred_cr,
-                qpc, intra=True,
-            )
+                src_cr[cy : cy + 8, cx : cx + 8] - pred_cr, qpc)
             take_i16 = sad16 <= i4_sad + i16_pen
             # I_PCM (mb_type 25): when even the cheaper coded form
             # spends more LUMA bits than the raw macroblock (384 bytes
@@ -1595,7 +1373,6 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
             # very low qp trips this.
             i4_bits = len(mode_bits.bits) + len(res_bits.bits)
             if not take_i16 and i4_bits > 8 * 384 + 64:
-                stats["n_pcm"] = stats.get("n_pcm", 0) + 1
                 tc_map[y0m // 4 : y0m // 4 + 4,
                        x0m // 4 : x0m // 4 + 4] = 16  # §9.2.1: nN = 16
                 mode4[y0m // 4 : y0m // 4 + 4,
@@ -1630,7 +1407,7 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
                            - p16[by : by + 4, bx : bx + 4])
                     w16 = forward_transform_4x4(res)
                     dc4[by // 4, bx // 4] = w16[0, 0]
-                    lv = quantize_4x4(w16, qp, intra=True)
+                    lv = quantize_4x4(w16, qp)
                     lv[0, 0] = 0
                     ac_levels.append(lv)
                     if lv.any():
@@ -1646,7 +1423,6 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
                 # I_16x16 wins: roll the staged I_4x4 state back (the
                 # luma recon is rewritten in full below; neighbor
                 # Intra4x4 contexts see DC per §8.3.1.1)
-                stats["n_i16"] += 1
                 tc_map[y0m // 4 : y0m // 4 + 4,
                        x0m // 4 : x0m // 4 + 4] = snap_tc
                 mode4[y0m // 4 : y0m // 4 + 4,
@@ -1677,7 +1453,6 @@ def _encode_slice(y_plane: np.ndarray, cb_plane: np.ndarray,
                         p16[by : by + 4, bx : bx + 4] + resr, 0, 255)
                     done4[y4g, x4g] = True
             else:
-                stats["n_i4"] += 1
                 w.ue(0)  # mb_type I_4x4
                 w.bits.extend(mode_bits.bits)
                 w.ue(0)        # intra_chroma_pred_mode DC
@@ -1712,9 +1487,8 @@ def _neighbor_nc(tc_map: np.ndarray, by: int, bx: int) -> int:
 
 def decode_iframe(data: bytes) -> dict:
     """Annex-B H.264 stream → {width, height, qp, luma (H,W) uint8,
-    cb, cr (H/2,W/2) uint8, n_mbs}. Decodes the first IDR slice (use
-    decode_stream for GOPs
-    with P frames); raises NotImplementedError with the exact
+    cb, cr (H/2,W/2) uint8, n_mbs, n_i16_mbs, n_pcm_mbs}. Decodes the
+    first IDR slice; raises NotImplementedError with the exact
     unsupported feature for anything outside the intra-CAVLC envelope
     documented in the module docstring."""
     sps = pps = slice_rbsp = None
@@ -1738,8 +1512,8 @@ def decode_iframe(data: bytes) -> dict:
         raise NotImplementedError("multi-slice pictures unsupported")
     if r.ue() % 5 != 2:
         raise NotImplementedError("only I slices supported")
-    (luma, cb, cr), qp, _poc, n_i16, n_pcm = _decode_islice_body(
-        r, sps, pps, idr=True, ref_idc=slice_ref_idc)
+    (luma, cb, cr), qp, n_i16, n_pcm = _decode_islice_body(
+        r, sps, pps, slice_ref_idc)
     return {
         "width": sps["width"],
         "height": sps["height"],
@@ -1824,10 +1598,9 @@ def _parse_pps(r: BitReader) -> dict:
     r.u(1)
     if r.ue() != 0:
         raise NotImplementedError("slice groups unsupported")
-    active_l0 = r.ue() + 1
-    r.ue()
-    weighted_pred = r.u(1)
-    wbidc = r.u(2)
+    r.ue()  # num_ref_idx_l0_default_active_minus1
+    r.ue()  # num_ref_idx_l1_default_active_minus1
+    r.u(3)  # weighted_pred_flag, weighted_bipred_idc
     qp_delta = r.se()
     r.se()
     r.se()
@@ -1836,1075 +1609,26 @@ def _parse_pps(r: BitReader) -> dict:
     r.u(1)
     return {
         "cabac": bool(cabac),
-        "active_l0": active_l0,
-        "weighted_pred": bool(weighted_pred),
-        "weighted_bipred": wbidc == 1,
-        "weighted_bipred_idc": wbidc,
         "pic_init_qp_delta": qp_delta,
         "deblocking_control": bool(deblocking_control),
     }
 
 
-# ---------------------------------------------------------------------------
-# inter coding (P slices): motion compensation, MV prediction, GOP codec.
-# Entered from the public spec: Table 9-4 (Inter CBP mapping), §8.4.2.2.1
-# (fractional luma interpolation), §8.4.1.3 (MV prediction), §8.4.1.1
-# (P_Skip), §7.3.4 (slice data, mb_skip_run).
 
-# Table 9-4, Inter column: codeNum -> coded_block_pattern.
-CBP_INTER = [0, 16, 1, 2, 4, 8, 32, 3, 5, 10, 12, 15, 47, 7, 11, 13,
-             14, 6, 9, 31, 35, 37, 42, 44, 33, 34, 36, 40, 39, 43, 45,
-             46, 17, 18, 20, 24, 19, 21, 26, 28, 23, 27, 29, 30, 22,
-             25, 38, 41]
-_CBP_INTER_INV = {cbp: i for i, cbp in enumerate(CBP_INTER)}
 
-
-def _cbp_lookup(table, code: int) -> int:
-    # untrusted-blob hardening: Table 9-4 has 48 rows; a larger codeNum
-    # is an invalid bitstream (documented ValueError), not an IndexError
-    if code >= len(table):
-        raise ValueError(f"invalid coded_block_pattern codeNum {code}")
-    return table[code]
-
-
-def _mc_luma(ref: np.ndarray, y0: int, x0: int, mv: tuple[int, int],
-             size: int | tuple[int, int] = 16) -> np.ndarray:
-    """Quarter-pel motion-compensated luma prediction (§8.4.2.2.1) for a
-    block at (y0, x0) of `size` = side length or (height, width), mv =
-    (mvx, mvy) in quarter-pel units. Out-of-picture samples use
-    coordinate clamping (the spec's Clip3 on xInt/yInt — identical to
-    edge replication). Returns int64 in [0, 255]."""
-    sy, sx = (size, size) if isinstance(size, int) else size
-    h, w_ = ref.shape
-    mvx, mvy = int(mv[0]), int(mv[1])
-    y_int, x_int = y0 + (mvy >> 2), x0 + (mvx >> 2)
-    fy, fx = mvy & 3, mvx & 3
-    if fx == 0 and fy == 0:
-        if 0 <= y_int and y_int + sy <= h and 0 <= x_int and x_int + sx <= w_:
-            # fully in-picture: plain slice (the hot path of the
-            # integer motion-search scan — ~10x cheaper than np.ix_)
-            return ref[y_int : y_int + sy, x_int : x_int + sx].astype(
-                np.int64)
-        rows = np.clip(np.arange(y_int, y_int + sy), 0, h - 1)
-        cols = np.clip(np.arange(x_int, x_int + sx), 0, w_ - 1)
-        return ref[np.ix_(rows, cols)].astype(np.int64)
-    # 2 above/left, 3 below/right of the (s+1)-sample grid, per axis
-    if (y_int >= 2 and y_int - 2 + sy + 6 <= h
-            and x_int >= 2 and x_int - 2 + sx + 6 <= w_):
-        win = ref[y_int - 2 : y_int - 2 + sy + 6,
-                  x_int - 2 : x_int - 2 + sx + 6].astype(np.int64)
-    else:
-        rows = np.clip(np.arange(y_int - 2, y_int - 2 + sy + 6), 0, h - 1)
-        cols = np.clip(np.arange(x_int - 2, x_int - 2 + sx + 6), 0, w_ - 1)
-        win = ref[np.ix_(rows, cols)].astype(np.int64)
-
-    def tap6(a: np.ndarray, axis: int) -> np.ndarray:
-        # unrounded 6-tap (1,-5,20,20,-5,1) along `axis`
-        s = [slice(None)] * a.ndim
-
-        def sl(i, span):
-            s2 = list(s)
-            s2[axis] = slice(i, i + span)
-            return a[tuple(s2)]
-
-        span = a.shape[axis] - 5
-        return (sl(0, span) - 5 * sl(1, span) + 20 * sl(2, span)
-                + 20 * sl(3, span) - 5 * sl(4, span) + sl(5, span))
-
-    clip = lambda v: np.clip(v, 0, 255)
-    g_grid = win[2:2 + sy + 1, 2:2 + sx + 1]            # integer samples
-    b_raw_all = tap6(win, 1)                             # (*, sx+1)
-    b_grid = clip((b_raw_all[2:2 + sy + 1] + 16) >> 5)   # horiz half-pel
-    h_grid = clip((tap6(win[:, 2:2 + sx + 1], 0) + 16) >> 5)  # vert half
-    j_grid = clip((tap6(b_raw_all, 0) + 512) >> 10)      # centre half-pel
-
-    G = g_grid[:sy, :sx]
-    H_ = g_grid[:sy, 1:sx + 1]
-    M = g_grid[1:sy + 1, :sx]
-    b = b_grid[:sy, :sx]
-    s_ = b_grid[1:sy + 1, :sx]
-    hh = h_grid[:sy, :sx]
-    m = h_grid[:sy, 1:sx + 1]
-    j = j_grid[:sy, :sx]
-    avg = lambda p, q: (p + q + 1) >> 1
-    table = {
-        (0, 0): G, (1, 0): avg(G, b), (2, 0): b, (3, 0): avg(H_, b),
-        (0, 1): avg(G, hh), (1, 1): avg(b, hh), (2, 1): avg(b, j),
-        (3, 1): avg(b, m),
-        (0, 2): hh, (1, 2): avg(hh, j), (2, 2): j, (3, 2): avg(j, m),
-        (0, 3): avg(M, hh), (1, 3): avg(hh, s_), (2, 3): avg(j, s_),
-        (3, 3): avg(m, s_),
-    }
-    return table[(fx, fy)]
-
-
-class _MotionField:
-    """4x4-granular motion bookkeeping for one reference list of one
-    slice. §8.4.1.3's neighbor derivation operates on the 4x4 blocks
-    adjacent to a PARTITION, which matters once macroblock partitions
-    exist (the lower 16x8 partition's B neighbor is the upper partition
-    of the same MB). Two masks, because the spec keys different rules
-    on different conditions: `dec` marks blocks already reconstructed
-    in decoding order (existence — drives C→D substitution and the
-    all-of-B/C-missing early rule), `used` marks blocks that predicted
-    from THIS list (refIdxLX == 0 vs -1 — drives candidate validity).
-    For P slices every decoded block uses L0, so used == dec."""
-
-    def __init__(self, mbs_h: int, mbs_w: int):
-        self.h4, self.w4 = mbs_h * 4, mbs_w * 4
-        self.mv = np.zeros((self.h4, self.w4, 2), dtype=np.int64)
-        self.dec = np.zeros((self.h4, self.w4), dtype=bool)
-        self.used = np.zeros((self.h4, self.w4), dtype=bool)
-        # per-4x4 reference index within the list (multi-ref P); only
-        # meaningful where `used` — everywhere else refIdxLX is -1
-        self.refi = np.zeros((self.h4, self.w4), dtype=np.int8)
-
-    def is_dec(self, y4: int, x4: int) -> bool:
-        return (0 <= y4 < self.h4 and 0 <= x4 < self.w4
-                and bool(self.dec[y4, x4]))
-
-    def get(self, y4: int, x4: int) -> tuple[bool, tuple[int, int]]:
-        """(used-this-list, mv) — an existing block that didn't use the
-        list contributes (False, (0, 0)), per refIdxLXN = -1."""
-        if 0 <= y4 < self.h4 and 0 <= x4 < self.w4 and self.used[y4, x4]:
-            return True, (int(self.mv[y4, x4, 0]), int(self.mv[y4, x4, 1]))
-        return False, (0, 0)
-
-    def get_ref(self, y4: int, x4: int) -> int:
-        """refIdxLX of the 4x4 block: -1 when it didn't use the list
-        (unavailable / intra / other list), per §8.4.1.3."""
-        if 0 <= y4 < self.h4 and 0 <= x4 < self.w4 and self.used[y4, x4]:
-            return int(self.refi[y4, x4])
-        return -1
-
-    def fill(self, y4: int, x4: int, h4: int, w4: int,
-             mv: tuple[int, int], used: bool = True,
-             ref: int = 0) -> None:
-        self.dec[y4 : y4 + h4, x4 : x4 + w4] = True
-        if used:
-            self.mv[y4 : y4 + h4, x4 : x4 + w4] = mv
-            self.used[y4 : y4 + h4, x4 : x4 + w4] = True
-            self.refi[y4 : y4 + h4, x4 : x4 + w4] = ref
-
-
-# P_8x8 sub-partition geometry (Table 7-17): sub_mb_type ->
-# ((dx, dy, w, h, search-key suffix), ...) within the 8x8 quadrant;
-# 4x4 sub-blocks in raster order
-P_SUB_GEOM = {
-    0: ((0, 0, 8, 8, ""),),
-    1: ((0, 0, 8, 4, "_84t"), (0, 4, 8, 4, "_84b")),
-    2: ((0, 0, 4, 8, "_48l"), (4, 0, 4, 8, "_48r")),
-    3: ((0, 0, 4, 4, "_44_0"), (4, 0, 4, 4, "_44_1"),
-        (0, 4, 4, 4, "_44_2"), (4, 4, 4, 4, "_44_3")),
-}
-
-
-def _mvp_partition(mf: _MotionField, x4: int, y4: int, w4: int,
-                   part: str = "16x16",
-                   ref_idx: int = 0) -> tuple[int, int]:
-    """Luma MV prediction for one L0/L1 partition (§8.4.1.3): median
-    over the A/B/C neighbors (C→D substitution when C is not DECODED;
-    a decoded neighbor that didn't use the list stays a zero-MV
-    non-candidate), with the §8.4.1.3.1 one-same-refIdx selection and
-    the §8.4.1.3.2 directional overrides for 16x8 / 8x16 partitions —
-    both keyed on refIdxLXN == `ref_idx` (single-ref slices have every
-    block at refIdx 0, so the match reduces to used-this-list)."""
-    a_dec = mf.is_dec(y4, x4 - 1)
-    b_dec = mf.is_dec(y4 - 1, x4)
-    avail_a, mv_a = mf.get(y4, x4 - 1)
-    avail_b, mv_b = mf.get(y4 - 1, x4)
-    ref_a = mf.get_ref(y4, x4 - 1)
-    ref_b = mf.get_ref(y4 - 1, x4)
-    if mf.is_dec(y4 - 1, x4 + w4):
-        c_dec = True
-        avail_c, mv_c = mf.get(y4 - 1, x4 + w4)
-        ref_c = mf.get_ref(y4 - 1, x4 + w4)
-    elif mf.is_dec(y4 - 1, x4 - 1):  # D substitution on existence
-        c_dec = True
-        avail_c, mv_c = mf.get(y4 - 1, x4 - 1)
-        ref_c = mf.get_ref(y4 - 1, x4 - 1)
-    else:
-        c_dec, avail_c, mv_c, ref_c = False, False, (0, 0), -1
-    same_a = avail_a and ref_a == ref_idx
-    same_b = avail_b and ref_b == ref_idx
-    same_c = avail_c and ref_c == ref_idx
-    if part == "16x8_top" and same_b:
-        return mv_b
-    if part == "16x8_bot" and same_a:
-        return mv_a
-    if part == "8x16_left" and same_a:
-        return mv_a
-    if part == "8x16_right" and same_c:
-        return mv_c
-    if not b_dec and not c_dec and a_dec:
-        return mv_a
-    sames = [same_a, same_b, same_c]
-    cands = [mv_a, mv_b, mv_c]
-    if sum(sames) == 1:
-        return cands[sames.index(True)]
-    med = lambda a, b, c: a + b + c - min(a, b, c) - max(a, b, c)
-    return (med(mv_a[0], mv_b[0], mv_c[0]), med(mv_a[1], mv_b[1], mv_c[1]))
-
-
-def _skip_mv4(mf: _MotionField, mbx: int, mby: int) -> tuple[int, int]:
-    """P_Skip motion vector (§8.4.1.1): zero when the left/top 4x4
-    neighbor of the MB is unavailable or is a zero-MV REF-0 block
-    (a zero-MV block predicting from another reference does not
-    trigger the zero condition), else the 16x16 median predictor at
-    refIdx 0 — P_Skip always references L0[0]."""
-    y4, x4 = mby * 4, mbx * 4
-    avail_a, mv_a = mf.get(y4, x4 - 1)
-    avail_b, mv_b = mf.get(y4 - 1, x4)
-    if not avail_a or not avail_b:
-        return (0, 0)
-    if (mv_a == (0, 0) and mf.get_ref(y4, x4 - 1) == 0) or \
-            (mv_b == (0, 0) and mf.get_ref(y4 - 1, x4) == 0):
-        return (0, 0)
-    return _mvp_partition(mf, x4, y4, 4, "16x16")
-
-
-def _encode_pslice(
-    ref: tuple[np.ndarray, np.ndarray, np.ndarray],
-    yuv: tuple[np.ndarray, np.ndarray, np.ndarray],
-    qp: int,
-    frame_num: int,
-    search_range: int = 4,
-    ref_slice: bool = True,
-    poc_lsb: int | None = None,
-    wp: dict | None = None,
-    ref2: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
-    override_single: bool = False,
-) -> tuple[tuple[np.ndarray, np.ndarray, np.ndarray], bytes, dict]:
-    """Encode one P slice (P_Skip, P_L0_16x16, P_L0_L0_16x8,
-    P_L0_L0_8x16 — per-MB cheapest under a qp-scaled partition
-    deadband) against `ref` = the previous decoded (y, cb, cr).
-    Chroma rides each partition's luma MV through the §8.4.2.2.2
-    eighth-pel interpolation and carries the real §8.5.11 residual.
-    Returns (reconstruction (y, cb, cr), slice RBSP, stats) — the
-    reconstruction is the decoder-exact reference. `ref_slice=False`
-    emits a non-reference slice (send with nal_ref_idc 0):
-    dec_ref_pic_marking is then absent per §7.3.3. `wp` (explicit
-    weighted prediction, §8.4.2.3.2 — must pair with a
-    weighted_pred=1 PPS) = {"logwd_y", "y": (w, o), "logwd_c",
-    "cb": (w, o), "cr": (w, o)}: every inter prediction (P_Skip
-    included) is weighted before the residual; motion search still
-    runs on unweighted samples (conformant — WP targets global fades
-    where the motion is near zero). `ref2` = the SECOND-newest
-    decoded reference (multi-ref coding — must pair with an
-    active_l0=2 PPS): every partition searches both references and
-    signals its choice with a te(v) ref_idx_l0 per §7.3.5.1/.2
-    (ref_idx per 8x8 quadrant in P_8x8, its sub-partitions sharing
-    the quadrant's reference); P_Skip stays pinned to L0[0]."""
-    if wp is not None and ref2 is not None:
-        raise ValueError("weighted prediction + multi-ref not combined "
-                         "in this envelope")
-    ref_y, ref_cb, ref_cr = ref
-    n_refs = 1 if ref2 is None else 2
-    ref_planes = [ref, ref2] if ref2 is not None else [ref]
-    y_plane, cb_plane, cr_plane = yuv
-    h, w_ = y_plane.shape
-    mbs_w, mbs_h = w_ // 16, h // 16
-    w = BitWriter()
-    w.ue(0)                 # first_mb_in_slice
-    w.ue(5)                 # slice_type P (all slices)
-    w.ue(0)                 # pps id
-    w.u(frame_num & 15, 4)  # frame_num
-    if poc_lsb is not None:  # SPS poc_type 0
-        w.u(poc_lsb & ((1 << _POC_LSB_BITS) - 1), _POC_LSB_BITS)
-    if override_single:
-        # first P after the IDR in a multi-ref GOP: the DPB holds one
-        # reference, so override the PPS's active_l0=2 down to 1
-        w.u(1, 1)           # num_ref_idx_active_override_flag
-        w.ue(0)             # num_ref_idx_l0_active_minus1
-    else:
-        w.u(0, 1)           # num_ref_idx_active_override_flag
-    w.u(0, 1)               # ref_pic_list_modification_flag_l0
-    if wp is not None:
-        # pred_weight_table (§7.3.3.2) — explicit weights for L0[0]
-        w.ue(wp["logwd_y"])
-        w.ue(wp["logwd_c"])
-        w.u(1, 1)           # luma_weight_l0_flag
-        w.se(wp["y"][0])
-        w.se(wp["y"][1])
-        w.u(1, 1)           # chroma_weight_l0_flag
-        for comp in ("cb", "cr"):
-            w.se(wp[comp][0])
-            w.se(wp[comp][1])
-    if ref_slice:
-        w.u(0, 1)           # adaptive_ref_pic_marking_mode_flag
-    w.se(qp - 26)           # slice_qp_delta
-    w.ue(1)                 # disable_deblocking_filter_idc = 1
-
-    if wp is not None:
-        _lwy, (_wy, _oy) = wp["logwd_y"], wp["y"]
-        _lwc = wp["logwd_c"]
-
-        def mcl(y, x, mv, size=16, ri=0):
-            return _apply_weight(_mc_luma(ref_y, y, x, mv, size),
-                                 _wy, _oy, _lwy)
-
-        def mcc(plane, comp, y, x, mv, size=8, ri=0):
-            wc, oc = wp[comp]
-            return _apply_weight(_mc_chroma(plane, y, x, mv, size),
-                                 wc, oc, _lwc)
-    else:
-        def mcl(y, x, mv, size=16, ri=0):
-            return _mc_luma(ref_planes[ri][0], y, x, mv, size)
-
-        def mcc(plane, comp, y, x, mv, size=8, ri=0):
-            if ri:
-                plane = ref_planes[ri][1 if comp == "cb" else 2]
-            return _mc_chroma(plane, y, x, mv, size)
-
-    src = y_plane.astype(np.int64)
-    src_cb = cb_plane.astype(np.int64)
-    src_cr = cr_plane.astype(np.int64)
-    recon = np.zeros((h, w_), dtype=np.int64)
-    rec_cb = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    rec_cr = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    tc_map = np.zeros((h // 4, w_ // 4), dtype=np.int64)
-    tc_cb = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    tc_cr = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    qpc = chroma_qp(qp)
-    mf = _MotionField(mbs_h, mbs_w)
-    stats = {"n_skip": 0, "n_coded": 0, "n_subpel": 0, "n_16x8": 0,
-             "n_8x16": 0, "n_8x8": 0, "n_sub_split": 0, "n_ref1": 0,
-             "mvs": []}
-    skip_run = 0
-    # partition-choice deadband: a second partition costs mb_type +
-    # MVD bits, so its SAD win must beat a qp-scaled penalty (encoder
-    # policy only — any choice is conformant, the decoder takes all)
-    part_pen = 16 << (qp // 6)
-
-    def block_levels(pred: np.ndarray, mby: int, mbx: int) -> list:
-        out = []
-        for blk in range(16):
-            bx, by = LUMA_BLOCK_XY[blk]
-            y, x = mby * 16 + by, mbx * 16 + bx
-            res = (src[y : y + 4, x : x + 4]
-                   - pred[by : by + 4, bx : bx + 4])
-            out.append(quantize_4x4(forward_transform_4x4(res), qp,
-                                    intra=False))
-        return out
-
-    for mby in range(mbs_h):
-        for mbx in range(mbs_w):
-            y0, x0 = mby * 16, mbx * 16
-            cy, cx = mby * 8, mbx * 8
-            smv = _skip_mv4(mf, mbx, mby)
-            pred_s = mcl(y0, x0, smv)
-            lv_s = block_levels(pred_s, mby, mbx)
-            if all(not lv.any() for lv in lv_s):
-                # luma is residual-free under the skip MV — P_Skip also
-                # implies NO chroma residual, so only take it when the
-                # MC'd chroma quantizes to zero too (else the MB is
-                # coded with cbp luma 0 + the chroma residual)
-                pcb_s = mcc(ref_cb, "cb", cy, cx, smv)
-                pcr_s = mcc(ref_cr, "cr", cy, cx, smv)
-                cc_s, dcs_s, acs_s = _quantize_chroma_mb(
-                    src_cb[cy : cy + 8, cx : cx + 8] - pcb_s,
-                    src_cr[cy : cy + 8, cx : cx + 8] - pcr_s,
-                    qpc, intra=False,
-                )
-                if cc_s == 0:
-                    skip_run += 1
-                    stats["n_skip"] += 1
-                    mf.fill(mby * 4, mbx * 4, 4, 4, smv)
-                    recon[y0 : y0 + 16, x0 : x0 + 16] = pred_s
-                    rec_cb[cy : cy + 8, cx : cx + 8] = pcb_s
-                    rec_cr[cy : cy + 8, cx : cx + 8] = pcr_s
-                    tc_map[y0 // 4 : y0 // 4 + 4,
-                           x0 // 4 : x0 // 4 + 4] = 0
-                    tc_cb[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-                    tc_cr[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-                    continue
-            blk = src[y0 : y0 + 16, x0 : x0 + 16]
-            srs = [_search_partitions(ref_planes[ri][0], blk, y0, x0,
-                                      search_range, subparts=True)
-                   for ri in range(n_refs)]
-            sr = srs[0]
-
-            def key_best(key):
-                # (cost, ref) cheapest over the active references —
-                # te(v) ref_idx costs 1 bit either way at 2 active
-                # refs, so no differential penalty; ties prefer ref 0
-                return min((srs[ri][key][1], ri) for ri in range(n_refs))
-
-            # per-quadrant best (sub-8x8 shape, ref) — Table 7-17
-            # sub_mb_type 0 = 8x8, 1 = 8x4, 2 = 4x8, 3 = 4x4, priced
-            # at part_pen per MVD beyond the first; the quadrant's
-            # sub-partitions share one ref_idx (§7.3.5.2), so the
-            # shape choice is made within each ref then refs compete
-            sub_cfg, sub_ref, q_cost = [], [], 0
-            for p in ("q00", "q01", "q10", "q11"):
-                c, ri, s = min(
-                    (cq, ri, sq)
-                    for ri in range(n_refs)
-                    for cq, sq in (
-                        (srs[ri][p][1], 0),
-                        (srs[ri][p + "_84t"][1]
-                         + srs[ri][p + "_84b"][1] + part_pen, 1),
-                        (srs[ri][p + "_48l"][1]
-                         + srs[ri][p + "_48r"][1] + part_pen, 2),
-                        (sum(srs[ri][p + f"_44_{i}"][1]
-                             for i in range(4)) + 3 * part_pen, 3),
-                    )
-                )
-                sub_cfg.append(s)
-                sub_ref.append(ri)
-                q_cost += c
-            full_c, full_r = key_best("full")
-            top_c, top_r = key_best("top")
-            bot_c, bot_r = key_best("bot")
-            left_c, left_r = key_best("left")
-            right_c, right_r = key_best("right")
-            mb_type = min(
-                (full_c, 0),
-                (top_c + bot_c + part_pen, 1),
-                (left_c + right_c + part_pen, 2),
-                (q_cost + 3 * part_pen, 3),  # 4 sub types + >=4 MVDs
-            )[1]
-            # partition worklist: (tag, dx, dy, pw, ph, search_key, ref)
-            if mb_type == 0:
-                work = [("16x16", 0, 0, 16, 16, "full", full_r)]
-                part_refs = [full_r]
-            elif mb_type == 1:
-                work = [("16x8_top", 0, 0, 16, 8, "top", top_r),
-                        ("16x8_bot", 0, 8, 16, 8, "bot", bot_r)]
-                part_refs = [top_r, bot_r]
-            elif mb_type == 2:
-                work = [("8x16_left", 0, 0, 8, 16, "left", left_r),
-                        ("8x16_right", 8, 0, 8, 16, "right", right_r)]
-                part_refs = [left_r, right_r]
-            else:
-                work = []
-                for qi, p in enumerate(("q00", "q01", "q10", "q11")):
-                    dyq, dxq = 8 * (qi // 2), 8 * (qi % 2)
-                    st = sub_cfg[qi]
-                    for sdx, sdy, pw_, ph_, suf in P_SUB_GEOM[st]:
-                        work.append(("sub", dxq + sdx, dyq + sdy,
-                                     pw_, ph_, p + suf, sub_ref[qi]))
-                part_refs = sub_ref
-            part_mvs = tuple(
-                _refine_subpel(
-                    ref_planes[ri][0],
-                    blk[dy : dy + ph, dx : dx + pw],
-                    y0 + dy, x0 + dx, *srs[ri][key],
-                )[0]
-                for (_tag, dx, dy, pw, ph, key, ri) in work
-            )
-            w.ue(skip_run)
-            skip_run = 0
-            # 0 P_L0_16x16, 1 P_L0_L0_16x8, 2 P_L0_L0_8x16, 3 P_8x8
-            w.ue(mb_type)
-            if mb_type == 3:
-                for st in sub_cfg:
-                    w.ue(st)  # sub_mb_type (Table 7-17)
-                if any(sub_cfg):
-                    stats["n_sub_split"] += 1
-            if n_refs > 1:
-                # all ref_idx_l0 first (§7.3.5.1/.2: per partition, or
-                # per 8x8 quadrant in P_8x8), then all MVDs
-                for ri in part_refs:
-                    w.te1(ri)
-                stats["n_ref1"] += sum(part_refs)
-            pred = np.empty((16, 16), dtype=np.int64)
-            pred_cb = np.empty((8, 8), dtype=np.int64)
-            pred_cr = np.empty((8, 8), dtype=np.int64)
-            for (tag, dx, dy, pw, ph, _key, ri), mv in zip(
-                work, part_mvs
-            ):
-                x4, y4 = (x0 + dx) // 4, (y0 + dy) // 4
-                mvp = _mvp_partition(mf, x4, y4, pw // 4, tag, ri)
-                w.se(int(mv[0] - mvp[0]))
-                w.se(int(mv[1] - mvp[1]))
-                pred[dy : dy + ph, dx : dx + pw] = mcl(
-                    y0 + dy, x0 + dx, mv, (ph, pw), ri
-                )
-                csz = (ph // 2, pw // 2)
-                pred_cb[dy // 2 : dy // 2 + ph // 2,
-                        dx // 2 : dx // 2 + pw // 2] = mcc(
-                    ref_cb, "cb", cy + dy // 2, cx + dx // 2, mv, csz,
-                    ri)
-                pred_cr[dy // 2 : dy // 2 + ph // 2,
-                        dx // 2 : dx // 2 + pw // 2] = mcc(
-                    ref_cr, "cr", cy + dy // 2, cx + dx // 2, mv, csz,
-                    ri)
-                mf.fill(y4, x4, ph // 4, pw // 4, mv, ref=ri)
-                if (mv[0] | mv[1]) & 3:
-                    stats["n_subpel"] += 1
-                stats["mvs"].append((mbx, mby, int(mv[0]), int(mv[1])))
-            levels = block_levels(pred, mby, mbx)
-            cc, dcs, acs = _quantize_chroma_mb(
-                src_cb[cy : cy + 8, cx : cx + 8] - pred_cb,
-                src_cr[cy : cy + 8, cx : cx + 8] - pred_cr,
-                qpc, intra=False,
-            )
-            cbp = cc << 4
-            for blk_i in range(16):
-                if levels[blk_i].any():
-                    bx, by = LUMA_BLOCK_XY[blk_i]
-                    cbp |= 1 << (2 * (by // 8) + (bx // 8))
-            w.ue(_CBP_INTER_INV[cbp])
-            if cbp:
-                w.se(0)  # mb_qp_delta
-            for blk_i in range(16):
-                bx, by = LUMA_BLOCK_XY[blk_i]
-                y, x = y0 + by, x0 + bx
-                group = 1 << (2 * (by // 8) + (bx // 8))
-                if cbp & group:
-                    nc = _neighbor_nc(tc_map, y // 4, x // 4)
-                    tc = encode_residual_block(w, levels[blk_i], nc)
-                    tc_map[y // 4, x // 4] = tc
-                    res = inverse_transform_4x4(
-                        dequantize_4x4(levels[blk_i], qp))
-                else:
-                    tc_map[y // 4, x // 4] = 0
-                    res = 0
-                recon[y : y + 4, x : x + 4] = np.clip(
-                    pred[by : by + 4, bx : bx + 4] + res, 0, 255)
-            _write_chroma_residual(w, cc, dcs, acs, tc_cb, tc_cr,
-                                   cy // 4, cx // 4)
-            rec_cb[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-                pred_cb, dcs["cb"], acs["cb"], qpc)
-            rec_cr[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-                pred_cr, dcs["cr"], acs["cr"], qpc)
-            stats["n_coded"] += 1
-            if mb_type == 1:
-                stats["n_16x8"] += 1
-            elif mb_type == 2:
-                stats["n_8x16"] += 1
-            elif mb_type == 3:
-                stats["n_8x8"] += 1
-    if skip_run:
-        w.ue(skip_run)
-    # full 4x4-granular motion field (skip MVs included) — the
-    # colocated-motion source for spatial-direct B slices that
-    # reference this frame as L1[0] (§8.4.1.2.2 colZeroFlag reads the
-    # corner 4x4 blocks under direct_8x8_inference)
-    stats["mv_grid4"] = mf.mv.copy()
-    return ((recon.astype(np.uint8), rec_cb.astype(np.uint8),
-             rec_cr.astype(np.uint8)), w.rbsp(), stats)
-
-
-def encode_gop(frames, qp: int = 20, search_range: int = 4) -> bytes:
-    """Encode a GOP: frames[0] as an IDR I-frame (the intra envelope
-    above), frames[1:] as P frames against the rolling single-frame
-    reference. → one Annex-B stream (SPS, PPS, IDR, P…)."""
-    recons, _stats, stream = _encode_gop_full(frames, qp, search_range)
-    _ = recons
-    return stream
-
-
-def gop_reconstruction(frames, qp: int = 20, search_range: int = 4):
-    """The encoder's own decoded-loop luma reconstructions +
-    per-P-frame stats — the bit-exact reference decode_stream must
-    reproduce (use gop_reconstruction_yuv for all three planes)."""
-    recons, stats, _stream = _encode_gop_full(frames, qp, search_range)
-    return [r[0] for r in recons], stats
-
-
-def gop_reconstruction_yuv(frames, qp: int = 20, search_range: int = 4):
-    """Full (y, cb, cr) decoded-loop reconstructions + stats."""
-    recons, stats, _stream = _encode_gop_full(frames, qp, search_range)
-    return recons, stats
-
-
-def encode_gop_multiref(frames, qp: int = 20,
-                        search_range: int = 4) -> bytes:
-    """Encode a GOP with TWO active references (max_num_ref_frames=2,
-    PPS num_ref_idx_l0_default_active_minus1=1): IDR, then P frames
-    whose partitions each signal a te(v) ref_idx_l0 choosing between
-    the two newest decoded frames (§8.2.4.2.1 default list order,
-    decreasing PicNum). The first P frame overrides active down to 1
-    in its slice header (the DPB holds one frame). Alternating or
-    briefly-occluded content picks L0[1] where the immediately
-    previous frame is the worse match."""
-    _recons, _stats, stream = _encode_gop_multiref_full(
-        frames, qp, search_range)
-    return stream
-
-
-def gop_multiref_reconstruction_yuv(frames, qp: int = 20,
-                                    search_range: int = 4):
-    """Decoded-loop (y, cb, cr) reconstructions + per-P-frame stats
-    (incl. n_ref1 = partitions predicting from L0[1]) for
-    encode_gop_multiref — the bit-exact decode_stream reference."""
-    recons, stats, _stream = _encode_gop_multiref_full(
-        frames, qp, search_range)
-    return recons, stats
-
-
-def _encode_gop_multiref_full(frames, qp, search_range):
-    if not frames:
-        raise ValueError("empty GOP")
-    y0, cb0, cr0 = _to_yuv(np.asarray(frames[0]))
-    h, w_ = y0.shape
-    recon, payload = _encode_slice(y0, cb0, cr0, qp)
-    stream = (_nal(7, _build_sps_rbsp(w_, h, max_refs=2))
-              + _nal(8, _build_pps_rbsp(active_l0=2))
-              + _nal(5, payload))
-    recons, stats = [recon], []
-    # DPB newest-first, max 2 (the §8.2.4.2.1 default P list order)
-    dpb = [tuple(p.astype(np.int64) for p in recon)]
-    for k, f in enumerate(frames[1:], start=1):
-        yuv = _to_yuv(np.asarray(f))
-        if yuv[0].shape != (h, w_):
-            raise ValueError("all GOP frames must share dimensions")
-        rec, rbsp, st = _encode_pslice(
-            dpb[0], yuv, qp, k, search_range,
-            ref2=dpb[1] if len(dpb) > 1 else None,
-            override_single=len(dpb) < 2,
-        )
-        stream += _nal(1, rbsp, ref_idc=2)
-        recons.append(rec)
-        stats.append(st)
-        dpb.insert(0, tuple(p.astype(np.int64) for p in rec))
-        del dpb[2:]
-    return recons, stats, stream
-
-
-def _encode_gop_full(frames, qp, search_range):
-    if not frames:
-        raise ValueError("empty GOP")
-    y0, cb0, cr0 = _to_yuv(np.asarray(frames[0]))
-    h, w_ = y0.shape
-    recon, payload = _encode_slice(y0, cb0, cr0, qp)
-    stream = (_nal(7, _build_sps_rbsp(w_, h))
-              + _nal(8, _build_pps_rbsp())
-              + _nal(5, payload))
-    recons, stats = [recon], []
-    ref = tuple(p.astype(np.int64) for p in recon)
-    for k, f in enumerate(frames[1:], start=1):
-        yuv = _to_yuv(np.asarray(f))
-        if yuv[0].shape != (h, w_):
-            raise ValueError("all GOP frames must share dimensions")
-        rec, rbsp, st = _encode_pslice(ref, yuv, qp, k, search_range)
-        stream += _nal(1, rbsp, ref_idc=2)
-        recons.append(rec)
-        stats.append(st)
-        ref = tuple(p.astype(np.int64) for p in rec)
-    return recons, stats, stream
-
-
-def _estimate_wp(yuv_src, ref) -> dict:
-    """Per-plane least-squares fade model src ~ w/2^logWD * ref + o
-    (w = 2^logWD * cov(s,r)/var(r), o = the residual mean) clamped to
-    the se(v)-codable [-128, 127]. LS matters: a multiplicative RGB
-    fade is AFFINE in the chroma planes (cb' = a*cb + (1-a)*128), so
-    a mean-ratio estimate would miss the contrast term. logWD = 5.
-    Estimation only — any weights are conformant."""
-    out = {"logwd_y": 5, "logwd_c": 5}
-    for key, s, r_ in (("y", yuv_src[0], ref[0]),
-                       ("cb", yuv_src[1], ref[1]),
-                       ("cr", yuv_src[2], ref[2])):
-        sf = np.asarray(s, dtype=np.float64).ravel()
-        rf = np.asarray(r_, dtype=np.float64).ravel()
-        var = float(((rf - rf.mean()) ** 2).mean())
-        if var > 1e-9:
-            slope = float(((sf - sf.mean()) * (rf - rf.mean())).mean()) / var
-        else:
-            slope = 1.0
-        w = max(-128, min(127, int(round(slope * 32))))
-        o = max(-128, min(127, int(round(sf.mean() - rf.mean() * w / 32))))
-        out[key] = (w, o)
-    return out
-
-
-def encode_gop_weighted(frames, qp: int = 20, search_range: int = 4,
-                        ) -> bytes:
-    """Encode a GOP with EXPLICIT WEIGHTED PREDICTION (§8.4.2.3.2):
-    I then P frames whose slice headers carry a per-plane (weight,
-    offset) pair estimated from the frame/reference means — the
-    standard fade/brightness-change tool (weighted_pred_flag = 1 PPS;
-    every P inter prediction, P_Skip included, is weighted before the
-    residual). A pure global fade then collapses to P_Skip rows
-    instead of coding a residual on every MB."""
-    recons, _stats, stream = _encode_gop_w_full(frames, qp, search_range)
-    _ = recons
-    return stream
-
-
-def gop_weighted_reconstruction_yuv(frames, qp: int = 20,
-                                    search_range: int = 4):
-    """Full (y, cb, cr) decoded-loop reconstructions + stats (each P
-    stat carries the weights used as `wp`)."""
-    recons, stats, _stream = _encode_gop_w_full(frames, qp, search_range)
-    return recons, stats
-
-
-def _encode_gop_w_full(frames, qp, search_range):
-    if not frames:
-        raise ValueError("empty GOP")
-    y0, cb0, cr0 = _to_yuv(np.asarray(frames[0]))
-    h, w_ = y0.shape
-    recon, payload = _encode_slice(y0, cb0, cr0, qp)
-    stream = (_nal(7, _build_sps_rbsp(w_, h))
-              + _nal(8, _build_pps_rbsp(weighted_pred=True))
-              + _nal(5, payload))
-    recons, stats = [recon], []
-    ref = tuple(p.astype(np.int64) for p in recon)
-    for k, f in enumerate(frames[1:], start=1):
-        yuv = _to_yuv(np.asarray(f))
-        if yuv[0].shape != (h, w_):
-            raise ValueError("all GOP frames must share dimensions")
-        wp = _estimate_wp(yuv, ref)
-        rec, rbsp, st = _encode_pslice(ref, yuv, qp, k, search_range,
-                                       wp=wp)
-        stream += _nal(1, rbsp, ref_idc=2)
-        recons.append(rec)
-        stats.append({"wp": wp, **st})
-        ref = tuple(p.astype(np.int64) for p in rec)
-    return recons, stats, stream
-
-
-def _decode_pslice(r: BitReader, sps: dict, pps: dict,
-                   ref_list,
-                   ref_idc: int = 1):
-    """Decode one P slice against `ref_list` = RefPicList0 as
-    [(y, cb, cr), ...] newest-first (decreasing PicNum — the §8.2.4.2.1
-    default init; single-ref callers pass a 1-list). The header's
-    first ue/ue (first_mb_in_slice, slice_type) are already consumed;
-    dec_ref_pic_marking is present only when nal_ref_idc != 0. When
-    the active reference count (PPS default, or the slice-header
-    override) is 2, each partition carries a te(v) ref_idx_l0 per
-    §7.3.5.1/.2 (one per 8x8 quadrant in P_8x8)."""
-    w_, h = sps["width"], sps["height"]
-    mbs_w, mbs_h = w_ // 16, h // 16
-    r.ue()  # pps id
-    r.u(sps["log2_max_frame_num"])  # frame_num
-    poc_lsb = (r.u(sps["log2_max_poc_lsb"])
-               if sps.get("poc_type", 2) == 0 else None)
-    active_l0 = pps.get("active_l0", 1)
-    if r.u(1):  # num_ref_idx_active_override_flag
-        active_l0 = r.ue() + 1
-    if active_l0 > 2:
-        raise NotImplementedError(
-            f"{active_l0} active references unsupported (max 2)"
-        )
-    if active_l0 > len(ref_list):
-        raise ValueError(
-            "slice requires more references than the DPB holds"
-        )
-    if r.u(1):
-        raise NotImplementedError("ref_pic_list_modification unsupported")
-    wp = None
-    if pps["weighted_pred"]:
-        # pred_weight_table (§7.3.3.2); absent flags mean the default
-        # weight 2^logWD with zero offset
-        lwy, lwc = r.ue(), r.ue()
-        wy, oy = 1 << lwy, 0
-        if r.u(1):
-            wy, oy = r.se(), r.se()
-        cbw, crw = (1 << lwc, 0), (1 << lwc, 0)
-        if r.u(1):
-            cbw = (r.se(), r.se())
-            crw = (r.se(), r.se())
-        wp = {"logwd_y": lwy, "y": (wy, oy), "logwd_c": lwc,
-              "cb": cbw, "cr": crw}
-    if ref_idc and r.u(1):
-        raise NotImplementedError("adaptive ref-pic marking unsupported")
-    qp = 26 + pps["pic_init_qp_delta"] + r.se()
-    if pps["deblocking_control"]:
-        if r.ue() != 1:
-            raise NotImplementedError(
-                "deblocking filter enabled — decode-without-deblock would "
-                "not be conformant"
-            )
-    planes = [tuple(p.astype(np.int64) for p in entry)
-              for entry in ref_list]
-    refi, ref_cb, ref_cr = planes[0]
-
-    if wp is not None:
-        if active_l0 > 1:
-            raise NotImplementedError(
-                "weighted prediction + multi-ref unsupported"
-            )
-
-        def mcl(y, x, mv, size=16, ri=0):
-            return _apply_weight(_mc_luma(refi, y, x, mv, size),
-                                 wp["y"][0], wp["y"][1], wp["logwd_y"])
-
-        def mcc(plane, comp, y, x, mv, size=8, ri=0):
-            wc, oc = wp[comp]
-            return _apply_weight(_mc_chroma(plane, y, x, mv, size),
-                                 wc, oc, wp["logwd_c"])
-    else:
-        def mcl(y, x, mv, size=16, ri=0):
-            return _mc_luma(planes[ri][0], y, x, mv, size)
-
-        def mcc(plane, comp, y, x, mv, size=8, ri=0):
-            if ri:
-                plane = planes[ri][1 if comp == "cb" else 2]
-            return _mc_chroma(plane, y, x, mv, size)
-
-    recon = np.zeros((h, w_), dtype=np.int64)
-    rec_cb = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    rec_cr = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    tc_map = np.zeros((h // 4, w_ // 4), dtype=np.int64)
-    tc_cb = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    tc_cr = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    qpc = chroma_qp(qp)
-    mf = _MotionField(mbs_h, mbs_w)
-    n_mbs = mbs_h * mbs_w
-    parts_of = {
-        0: (("16x16", 0, 0, 16, 16),),
-        1: (("16x8_top", 0, 0, 16, 8), ("16x8_bot", 0, 8, 16, 8)),
-        2: (("8x16_left", 0, 0, 8, 16), ("8x16_right", 8, 0, 8, 16)),
-        3: (("8x8", 0, 0, 8, 8), ("8x8", 8, 0, 8, 8),
-            ("8x8", 0, 8, 8, 8), ("8x8", 8, 8, 8, 8)),
-    }
-
-    def recon_skip(addr: int) -> None:
-        mby, mbx = addr // mbs_w, addr % mbs_w
-        smv = _skip_mv4(mf, mbx, mby)
-        mf.fill(mby * 4, mbx * 4, 4, 4, smv)
-        recon[mby * 16 : mby * 16 + 16, mbx * 16 : mbx * 16 + 16] = \
-            mcl(mby * 16, mbx * 16, smv)
-        cy, cx = mby * 8, mbx * 8
-        rec_cb[cy : cy + 8, cx : cx + 8] = mcc(ref_cb, "cb", cy, cx, smv)
-        rec_cr[cy : cy + 8, cx : cx + 8] = mcc(ref_cr, "cr", cy, cx, smv)
-        tc_cb[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-        tc_cr[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-
-    addr = 0
-    while addr < n_mbs:
-        skip_run = r.ue()
-        if addr + skip_run > n_mbs:
-            raise ValueError("mb_skip_run overruns the picture")
-        for _ in range(skip_run):
-            recon_skip(addr)
-            addr += 1
-        if addr >= n_mbs:
-            break
-        mby, mbx = addr // mbs_w, addr % mbs_w
-        mb_type = r.ue()
-        if mb_type > 3:
-            raise NotImplementedError(
-                f"P mb_type {mb_type} unsupported "
-                "(16x16/16x8/8x16/8x8 only)"
-            )
-        if mb_type == 3:
-            sub_types = [r.ue() for _ in range(4)]
-            if any(st > 3 for st in sub_types):
-                raise ValueError(
-                    f"invalid P sub_mb_type {max(sub_types)} (Table 7-17)"
-                )
-            # ref_idx_l0 per 8x8 quadrant (§7.3.5.2), its
-            # sub-partitions sharing the quadrant's reference
-            sub_refs = ([r.te1() for _ in range(4)]
-                        if active_l0 > 1 else [0] * 4)
-            work = []
-            for qi, st in enumerate(sub_types):
-                dyq, dxq = 8 * (qi // 2), 8 * (qi % 2)
-                for sdx, sdy, pw_, ph_, _suf in P_SUB_GEOM[st]:
-                    work.append(("sub", dxq + sdx, dyq + sdy, pw_, ph_,
-                                 sub_refs[qi]))
-        else:
-            parts = parts_of[mb_type]
-            # all ref_idx_l0 first (§7.3.5.1), then all MVDs
-            prefs = ([r.te1() for _ in parts]
-                     if active_l0 > 1 else [0] * len(parts))
-            work = [p + (ri,) for p, ri in zip(parts, prefs)]
-        y0, x0 = mby * 16, mbx * 16
-        cy, cx = mby * 8, mbx * 8
-        pred = np.empty((16, 16), dtype=np.int64)
-        pred_cb = np.empty((8, 8), dtype=np.int64)
-        pred_cr = np.empty((8, 8), dtype=np.int64)
-        for tag, dx, dy, pw, ph, ri in work:
-            x4, y4 = (x0 + dx) // 4, (y0 + dy) // 4
-            mvp = _mvp_partition(mf, x4, y4, pw // 4, tag, ri)
-            mvd = (r.se(), r.se())
-            mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-            pred[dy : dy + ph, dx : dx + pw] = mcl(
-                y0 + dy, x0 + dx, mv, (ph, pw), ri
-            )
-            csz = (ph // 2, pw // 2)
-            pred_cb[dy // 2 : dy // 2 + ph // 2,
-                    dx // 2 : dx // 2 + pw // 2] = mcc(
-                ref_cb, "cb", cy + dy // 2, cx + dx // 2, mv, csz, ri)
-            pred_cr[dy // 2 : dy // 2 + ph // 2,
-                    dx // 2 : dx // 2 + pw // 2] = mcc(
-                ref_cr, "cr", cy + dy // 2, cx + dx // 2, mv, csz, ri)
-            mf.fill(y4, x4, ph // 4, pw // 4, mv, ref=ri)
-        cbp = _cbp_lookup(CBP_INTER, r.ue())
-        if cbp and r.se() != 0:
-            raise NotImplementedError("mb_qp_delta unsupported")
-        for blk in range(16):
-            bx, by = LUMA_BLOCK_XY[blk]
-            y, x = y0 + by, x0 + bx
-            group = 1 << (2 * (by // 8) + (bx // 8))
-            if cbp & group:
-                nc = _neighbor_nc(tc_map, y // 4, x // 4)
-                levels, tc = decode_residual_block(r, nc)
-                tc_map[y // 4, x // 4] = tc
-                res = inverse_transform_4x4(dequantize_4x4(levels, qp))
-            else:
-                tc_map[y // 4, x // 4] = 0
-                res = 0
-            recon[y : y + 4, x : x + 4] = np.clip(
-                pred[by : by + 4, bx : bx + 4] + res, 0, 255)
-        dcs, acs = _read_chroma_residual(r, cbp >> 4, tc_cb, tc_cr,
-                                         cy // 4, cx // 4)
-        rec_cb[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-            pred_cb, dcs["cb"], acs["cb"], qpc)
-        rec_cr[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-            pred_cr, dcs["cr"], acs["cr"], qpc)
-        addr += 1
-    return ((recon.astype(np.uint8), rec_cb.astype(np.uint8),
-             rec_cr.astype(np.uint8)), qp, mf.mv, poc_lsb)
-
-
-def decode_stream(data: bytes) -> dict:
-    """Annex-B H.264 stream → {width, height, qp, n_mbs, frames,
-    frame_types} — decodes every I and P slice in order, maintaining
-    the single-frame reference (max_num_ref_frames=1 sliding window).
-    Raises NotImplementedError with the exact unsupported feature for
-    anything outside the documented envelope (including a second,
-    DIFFERENT SPS/PPS mid-stream — one sequence per call), ValueError
-    for malformed streams (including a P slice before any IDR).
-    Non-reference slices (nal_ref_idc 0) are decoded but do not
-    replace the prediction reference, per the spec's DPB rules.
-    Each DPB entry carries the frame's per-MB motion field + intra
-    mask (the colocated-motion source for spatial-direct B slices);
-    per-B-frame mb-mode histograms come back as `b_mode_counts`."""
-    sps = pps = None
-    frames, frames_cb, frames_cr, types = [], [], [], []
-    # ((y,cb,cr), motion, poc, ref_poc), newest first
-    refs: list[tuple[tuple, dict, int | None, int | None]] = []
-    pocs: list[int | None] = []
-    b_mode_counts: list[dict] = []
-    i16_counts: list[int] = []  # per decoded I frame
-    qp_first = None
-    prev_msb = prev_lsb = 0  # §8.2.1.1 reference-POC state (poc_type 0)
-    for ref_idc, nal_type, rbsp in _split_annexb(data):
-        if nal_type == 7:
-            new_sps = _parse_sps(BitReader(strip_emulation(rbsp)))
-            if sps is not None and new_sps != sps:
-                raise NotImplementedError(
-                    "multiple differing SPS (one sequence per stream)"
-                )
-            sps = new_sps
-        elif nal_type == 8:
-            new_pps = _parse_pps(BitReader(strip_emulation(rbsp)))
-            if pps is not None and new_pps != pps:
-                raise NotImplementedError(
-                    "multiple differing PPS (one sequence per stream)"
-                )
-            pps = new_pps
-        elif nal_type in (1, 5):
-            if sps is None or pps is None:
-                raise ValueError("slice before SPS/PPS")
-            if pps["cabac"]:
-                raise NotImplementedError("CABAC entropy coding unsupported")
-            r = BitReader(strip_emulation(rbsp))
-            if r.ue() != 0:
-                raise NotImplementedError("multi-slice pictures unsupported")
-            slice_type = r.ue() % 5
-            poc0 = sps.get("poc_type", 2) == 0
-            max_lsb = 1 << sps.get("log2_max_poc_lsb", 0)
-            ref_poc = None
-            if slice_type == 2:
-                if nal_type == 5:  # IDR resets the POC state (§8.2.1.1)
-                    prev_msb = prev_lsb = 0
-                yuv, qp, lsb, n_i16, _n_pcm = _decode_islice_body(
-                    r, sps, pps, idr=(nal_type == 5), ref_idc=ref_idc
-                )
-                i16_counts.append(n_i16)
-                minfo = _intra_motion_info(
-                    sps["height"] // 16, sps["width"] // 16
-                )
-                types.append("I")
-            elif slice_type == 0:
-                if not refs:
-                    raise ValueError("P slice before any decoded I frame")
-                yuv, qp, mvs, lsb = _decode_pslice(
-                    r, sps, pps, [e[0] for e in refs[:2]], ref_idc
-                )
-                minfo = _inter_motion_info(mvs)
-                ref_poc = refs[0][2]
-                types.append("P")
-            elif slice_type == 1:
-                if len(refs) < 2:
-                    raise ValueError(
-                        "B slice before two decoded reference frames"
-                    )
-                if poc0:
-                    # POC-ordered default list init: L0[0] = the past
-                    # reference, L1[0] = the future one (§8.2.4.2.3)
-                    l0, l1 = sorted(refs[:2], key=lambda e: e[2])
-                    tdir = {
-                        "max_lsb": max_lsb,
-                        "prev_msb": prev_msb,
-                        "prev_lsb": prev_lsb,
-                        "poc_l0": l0[2],
-                        "poc_col": l1[2],
-                        "col_ref_poc": l1[3],
-                    }
-                else:
-                    l0, l1 = refs[0], refs[1]
-                    tdir = None
-                yuv, qp, counts, minfo, lsb = _decode_bslice(
-                    r, sps, pps, l0[0], l1[0], ref_idc,
-                    col_info=l1[1], tdir=tdir,
-                )
-                ref_poc = l0[2]
-                b_mode_counts.append(counts)
-                types.append("B")
-            else:
-                raise NotImplementedError(
-                    "only I, P, and B slices supported (no SP/SI)"
-                )
-            if poc0:
-                poc = _poc_from_lsb(lsb, prev_msb, prev_lsb, max_lsb)
-                if ref_idc:
-                    prev_msb, prev_lsb = poc - lsb, lsb
-            else:
-                poc = None
-            pocs.append(poc)
-            frames.append(yuv[0])
-            frames_cb.append(yuv[1])
-            frames_cr.append(yuv[2])
-            if ref_idc:
-                refs.insert(0, (yuv, minfo, poc, ref_poc))
-                del refs[2:]
-            if qp_first is None:
-                qp_first = qp
-    if sps is None or pps is None or not frames:
-        raise ValueError("stream lacks SPS, PPS, or a decodable slice")
-    return {
-        "width": sps["width"],
-        "height": sps["height"],
-        "qp": qp_first,
-        "n_mbs": (sps["width"] // 16) * (sps["height"] // 16),
-        "frames": frames,
-        "frames_cb": frames_cb,
-        "frames_cr": frames_cr,
-        "frame_types": types,
-        "poc": pocs,
-        "b_mode_counts": b_mode_counts,
-        "i16_counts": i16_counts,
-    }
-
-
-def _decode_islice_body(r: BitReader, sps: dict, pps: dict, idr: bool,
-                        ref_idc: int = 1) -> tuple[np.ndarray, int]:
-    """Decode an I slice whose first_mb/slice_type were consumed — the
-    same envelope decode_iframe enforces (all nine Intra_4x4 modes,
-    CAVLC).
-    dec_ref_pic_marking is present only when nal_ref_idc != 0."""
+def _decode_islice_body(r: BitReader, sps: dict, pps: dict,
+                        ref_idc: int) -> tuple:
+    """Decode an IDR I slice whose first_mb/slice_type were consumed →
+    ((luma, cb, cr), qp, n_i16, n_pcm). dec_ref_pic_marking is present
+    only when nal_ref_idc != 0."""
     w_, h = sps["width"], sps["height"]
     r.ue()  # pps id
     r.u(sps["log2_max_frame_num"])
-    if idr:
-        r.ue()  # idr_pic_id
-    poc_lsb = (r.u(sps["log2_max_poc_lsb"])
-               if sps.get("poc_type", 2) == 0 else None)
+    r.ue()  # idr_pic_id
+    if sps["poc_type"] == 0:
+        r.u(sps["log2_max_poc_lsb"])  # pic_order_cnt_lsb
     if ref_idc:
-        if idr:
-            r.u(2)  # no_output_of_prior_pics + long_term_reference flags
-        elif r.u(1):
-            raise NotImplementedError("adaptive ref-pic marking unsupported")
+        r.u(2)  # no_output_of_prior_pics + long_term_reference flags
     qp = 26 + pps["pic_init_qp_delta"] + r.se()
     if pps["deblocking_control"]:
         if r.ue() != 1:
@@ -3044,1598 +1768,4 @@ def _decode_islice_body(r: BitReader, sps: dict, pps: dict, idr: bool,
         rec_cr[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
             _chroma_dc_pred8(rec_cr, cy, cx), dcs["cr"], acs["cr"], qpc)
     return ((recon.astype(np.uint8), rec_cb.astype(np.uint8),
-             rec_cr.astype(np.uint8)), qp, poc_lsb, n_i16, n_pcm)
-
-
-# ---------------------------------------------------------------------------
-# B slices (low-delay generalized B): B_Skip, B_Direct_16x16 (spatial
-# mode, §8.4.1.2.2) and B_L0/B_L1/B_Bi 16x16 partitions against the
-# TWO most recent past reference frames (L0[0] = nearest, L1[0] =
-# second-nearest — the conformant default list init for two past refs
-# after the spec's L1 first-two-swap rule), default bi-prediction
-# (§8.4.2.3: (predL0 + predL1 + 1) >> 1), Main profile. Spatial direct
-# derives per-list refIdx from the neighbors' usage, the MV from the
-# §8.4.1.3.1 median, and zeroes it when the colocated MB of L1[0] is
-# (near-)static (colZeroFlag) — so the DPB carries each reference's
-# per-MB motion field + intra mask. Temporal direct / sub-16x16 /
-# weighted prediction stay honest NotImplementedError guards. Entered
-# from Table 7-14 (B mb_type: 0 B_Direct_16x16, 1 B_L0_16x16,
-# 2 B_L1_16x16, 3 B_Bi_16x16).
-
-
-def _direct_spatial(mf0: _MotionField, mf1: _MotionField, mbx: int,
-                    mby: int, col_mv4: np.ndarray, col_intra4: np.ndarray):
-    """Spatial-direct motion for one 16x16 B MB (§8.4.1.2.2, single ref
-    per list): → (use0, use1, mv0, mv1, zero_quads). Per list X:
-    refIdxLX = 0 iff any existing neighbor (A, B, C with the D
-    substitution on existence) used list X, else -1; both -1 → zero-MV
-    bi-prediction (directZeroPredictionFlag, zero_quads all True). An
-    in-use list takes the §8.4.1.3.1 median MVP; zero_quads[qy][qx]
-    (the direct_8x8_inference rule) zeroes the MV of each 8x8 quadrant
-    whose colocated CORNER 4x4 block in RefPicList1[0] is non-intra
-    with |mvCol| <= 1 quarter-pel in both components (colZeroFlag;
-    refIdxCol is always 0 in this one-ref envelope)."""
-    y4, x4 = mby * 4, mbx * 4
-
-    def list_ref(mf: _MotionField) -> int:
-        a = mf.get(y4, x4 - 1)[0]
-        b = mf.get(y4 - 1, x4)[0]
-        if mf.is_dec(y4 - 1, x4 + 4):
-            c = mf.get(y4 - 1, x4 + 4)[0]
-        else:
-            c = mf.get(y4 - 1, x4 - 1)[0]
-        return 0 if (a or b or c) else -1
-
-    ref0 = list_ref(mf0)
-    ref1 = list_ref(mf1)
-    all_zero = np.ones((2, 2), dtype=bool)
-    if ref0 < 0 and ref1 < 0:
-        return True, True, (0, 0), (0, 0), all_zero
-    # colZeroFlag per 8x8 quadrant from the colocated corner 4x4 block
-    # (direct_8x8_inference_flag = 1: corners 0/3/12/15 of the col MB)
-    zq = np.zeros((2, 2), dtype=bool)
-    for qy in range(2):
-        for qx in range(2):
-            cy, cx = y4 + 3 * qy, x4 + 3 * qx
-            zq[qy, qx] = (
-                not bool(col_intra4[cy, cx])
-                and abs(int(col_mv4[cy, cx, 0])) <= 1
-                and abs(int(col_mv4[cy, cx, 1])) <= 1
-            )
-    out = []
-    for refx, mfx in ((ref0, mf0), (ref1, mf1)):
-        if refx < 0:
-            out.append((False, (0, 0)))
-        else:
-            out.append((True, _mvp_partition(mfx, x4, y4, 4, "16x16")))
-    (u0, mv0), (u1, mv1) = out
-    return u0, u1, mv0, mv1, zq
-
-
-def _intra_motion_info(mbs_h: int, mbs_w: int) -> dict:
-    """DPB motion record for an all-intra frame: zero MVs, intra mask
-    everywhere (colZeroFlag is false against an intra colocated
-    block). 4x4-granular, like every motion field."""
-    return {
-        "mv4": np.zeros((mbs_h * 4, mbs_w * 4, 2), dtype=np.int64),
-        "intra4": np.ones((mbs_h * 4, mbs_w * 4), dtype=bool),
-    }
-
-
-def _inter_motion_info(mv4: np.ndarray) -> dict:
-    return {"mv4": mv4, "intra4": np.zeros(mv4.shape[:2], dtype=bool)}
-
-
-# ---------------------------------------------------------------------------
-# temporal direct support (§8.2.1.1 POC type 0, §8.4.1.2.3 MV scaling)
-
-
-def _poc_from_lsb(lsb: int, prev_msb: int, prev_lsb: int,
-                  max_lsb: int) -> int:
-    """§8.2.1.1 PicOrderCntMsb derivation (wraparound-aware)."""
-    if lsb < prev_lsb and prev_lsb - lsb >= max_lsb // 2:
-        msb = prev_msb + max_lsb
-    elif lsb > prev_lsb and lsb - prev_lsb > max_lsb // 2:
-        msb = prev_msb - max_lsb
-    else:
-        msb = prev_msb
-    return msb + lsb
-
-
-def _dist_scale_factor(poc_cur: int, poc_l0: int, poc_col: int) -> int:
-    """§8.4.1.2.3: tb/td clipping, tx = (16384 + |td|/2)/td (C-style
-    truncation), DistScaleFactor = Clip3(-1024, 1023, (tb*tx+32)>>6).
-    poc_l0 = POC of RefPicList0[refIdxL0] (== refPicCol here),
-    poc_col = POC of the colocated picture RefPicList1[0]."""
-    tb = max(-128, min(127, poc_cur - poc_l0))
-    td = max(-128, min(127, poc_col - poc_l0))
-    if td == 0:
-        raise ValueError("temporal direct undefined for td == 0")
-    tx = int((16384 + abs(td) // 2) / td)
-    return max(-1024, min(1023, (tb * tx + 32) >> 6))
-
-
-def _temporal_direct_mb(col_mv4: np.ndarray, col_intra4: np.ndarray,
-                        mbx: int, mby: int, dsf: int):
-    """Temporal-direct motion for one 16x16 B MB: per 8x8 quadrant
-    (direct_8x8_inference — the colocated CORNER 4x4 block supplies
-    mvCol, the same corner sampling the spatial path uses for
-    colZeroFlag), mvL0 = (DistScaleFactor*mvCol + 128) >> 8 and
-    mvL1 = mvL0 - mvCol; an intra colocated block contributes
-    mvCol = 0. Both lists are always in use (refIdxL0 = refIdxL1 = 0).
-    → (m0q, m1q): two 2x2 grids of (mvx, mvy)."""
-    y4, x4 = mby * 4, mbx * 4
-    m0q = [[None, None], [None, None]]
-    m1q = [[None, None], [None, None]]
-    for qy in range(2):
-        for qx in range(2):
-            cy4, cx4 = y4 + 3 * qy, x4 + 3 * qx  # corner 4x4 block
-            if col_intra4[cy4, cx4]:
-                mcx, mcy = 0, 0
-            else:
-                mcx, mcy = int(col_mv4[cy4, cx4, 0]), int(
-                    col_mv4[cy4, cx4, 1])
-            l0x = (dsf * mcx + 128) >> 8
-            l0y = (dsf * mcy + 128) >> 8
-            m0q[qy][qx] = (l0x, l0y)
-            m1q[qy][qx] = (l0x - mcx, l0y - mcy)
-    return m0q, m1q
-
-
-def _quad_pred16(r0: np.ndarray, r1: np.ndarray, m0q, m1q,
-                 y0: int, x0: int, wp=None) -> np.ndarray:
-    """Bi-predicted 16x16 luma from per-quadrant MV pairs (§8.4.2.3
-    default averaging, or the §8.4.2.3.2 explicit weighted op when
-    `wp` is set) — the temporal-direct prediction shape."""
-    if m0q[0][0] == m0q[0][1] == m0q[1][0] == m0q[1][1] and \
-            m1q[0][0] == m1q[0][1] == m1q[1][0] == m1q[1][1]:
-        return _bi_luma(r0, r1, True, True, m0q[0][0], m1q[0][0],
-                        y0, x0, 16, wp)
-    pred = np.empty((16, 16), dtype=np.int64)
-    for qy in range(2):
-        for qx in range(2):
-            pred[8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8] = _bi_luma(
-                r0, r1, True, True, m0q[qy][qx], m1q[qy][qx],
-                y0 + 8 * qy, x0 + 8 * qx, 8, wp)
-    return pred
-
-
-# Table 7-14 two-partition B macroblock modes:
-# mb_type -> (orientation, part0 mode, part1 mode); orientation 0 is
-# 16x8 (top/bottom), 1 is 8x16 (left/right); part modes 0 = Pred_L0,
-# 1 = Pred_L1, 2 = BiPred. Types 4-7 are the single-list modes, 8-11
-# mixed-list, 12-21 the Bi combinations.
-B_TWOPART = {
-    4: (0, 0, 0), 5: (1, 0, 0), 6: (0, 1, 1), 7: (1, 1, 1),
-    8: (0, 0, 1), 9: (1, 0, 1), 10: (0, 1, 0), 11: (1, 1, 0),
-    12: (0, 0, 2), 13: (1, 0, 2), 14: (0, 1, 2), 15: (1, 1, 2),
-    16: (0, 2, 0), 17: (1, 2, 0), 18: (0, 2, 1), 19: (1, 2, 1),
-    20: (0, 2, 2), 21: (1, 2, 2),
-}
-
-# partition geometry per orientation: (tag, dx, dy, w, h)
-B_PART_GEOM = (
-    (("16x8_top", 0, 0, 16, 8), ("16x8_bot", 0, 8, 16, 8)),
-    (("8x16_left", 0, 0, 8, 16), ("8x16_right", 8, 0, 8, 16)),
-)
-
-# B sub-8x8 split modes (Table 7-18 sub_mb_type 4-12): sub_mb_type ->
-# (prediction mode 0=L0 / 1=L1 / 2=Bi applied to EVERY sub-partition,
-# sub-partition geometry within the 8x8 quadrant as (sdx, sdy, w, h,
-# search-key suffix) — same suffixes _search_partitions(subparts=True)
-# tracks for the P tree)
-_B8_GEOM_84 = ((0, 0, 8, 4, "_84t"), (0, 4, 8, 4, "_84b"))
-_B8_GEOM_48 = ((0, 0, 4, 8, "_48l"), (4, 0, 4, 8, "_48r"))
-_B8_GEOM_44 = ((0, 0, 4, 4, "_44_0"), (4, 0, 4, 4, "_44_1"),
-               (0, 4, 4, 4, "_44_2"), (4, 4, 4, 4, "_44_3"))
-B_SUB_SPLIT = {
-    4: (0, _B8_GEOM_84), 5: (0, _B8_GEOM_48),
-    6: (1, _B8_GEOM_84), 7: (1, _B8_GEOM_48),
-    8: (2, _B8_GEOM_84), 9: (2, _B8_GEOM_48),
-    10: (0, _B8_GEOM_44), 11: (1, _B8_GEOM_44),
-    12: (2, _B8_GEOM_44),
-}
-
-
-def _b_sub_geom(st: int):
-    """Sub-partition geometry of a Table 7-18 sub_mb_type (types 1-3
-    are one whole-quadrant 8x8 part; 4-12 split per B_SUB_SPLIT)."""
-    if st >= 4:
-        return B_SUB_SPLIT[st][1]
-    return ((0, 0, 8, 8, ""),)
-
-
-def _b_sub_uses(st: int, lx: int) -> bool:
-    """Whether Table 7-18 sub_mb_type `st` carries list-`lx` motion
-    (type 0 = Direct carries derived motion, handled separately)."""
-    if st == 0:
-        return False
-    pm = B_SUB_SPLIT[st][0] if st >= 4 else st - 1
-    return pm == 2 or pm == lx
-
-
-def _b_mode_key(mb_type: int) -> str:
-    """Histogram bucket for a B mb_type (shared by encoder stats and
-    decoder counts so the probes' modes_ok equality is well-typed)."""
-    if mb_type == 0:
-        return "n_direct"
-    if mb_type == 1:
-        return "n_l0"
-    if mb_type == 2:
-        return "n_l1"
-    if mb_type == 3:
-        return "n_bi"
-    if mb_type in (4, 5):
-        return "n_l0_part"
-    if mb_type in (6, 7):
-        return "n_l1_part"
-    if mb_type in (8, 9, 10, 11):
-        return "n_mixed_part"
-    if mb_type == 22:
-        return "n_b8x8"
-    return "n_bi_part"
-
-
-def _quad_pred_chroma8(c0: np.ndarray, c1: np.ndarray, m0q, m1q,
-                       cy: int, cx: int, wp=None) -> np.ndarray:
-    """Chroma twin of _quad_pred16 (4x4 chroma per 8x8 luma quad)."""
-    if m0q[0][0] == m0q[0][1] == m0q[1][0] == m0q[1][1] and \
-            m1q[0][0] == m1q[0][1] == m1q[1][0] == m1q[1][1]:
-        return _bi_chroma(c0, c1, True, True, m0q[0][0], m1q[0][0],
-                          cy, cx, 8, wp)
-    out = np.empty((8, 8), dtype=np.int64)
-    for qy in range(2):
-        for qx in range(2):
-            out[4 * qy : 4 * qy + 4, 4 * qx : 4 * qx + 4] = _bi_chroma(
-                c0, c1, True, True, m0q[qy][qx], m1q[qy][qx],
-                cy + 4 * qy, cx + 4 * qx, 4, wp)
-    return out
-
-
-def _refine_subpel(ref: np.ndarray, blk_src: np.ndarray, y0: int, x0: int,
-                   best_mv: tuple[int, int], best_cost: int,
-                   ) -> tuple[tuple[int, int], int]:
-    """Half- then quarter-pel refinement around an integer-stage best."""
-    size = blk_src.shape
-    for step in (2, 1):
-        base = best_mv
-        for dy in (-step, 0, step):
-            for dx in (-step, 0, step):
-                cand = (base[0] + dx, base[1] + dy)
-                if cand == base:
-                    continue
-                cost = int(np.abs(
-                    blk_src - _mc_luma(ref, y0, x0, cand, size)).sum())
-                if cost < best_cost:
-                    best_mv, best_cost = cand, cost
-    return best_mv, best_cost
-
-
-def _search_best(ref: np.ndarray, blk_src: np.ndarray, y0: int, x0: int,
-                 search_range: int) -> tuple[tuple[int, int], int]:
-    """Exhaustive integer window + half/quarter refinement (the P-slice
-    search) for a block of blk_src.shape at (y0, x0), returned as
-    (mv, SAD)."""
-    size = blk_src.shape
-    best_mv, best_cost = (0, 0), None
-    for dy in range(-search_range, search_range + 1):
-        for dx in range(-search_range, search_range + 1):
-            cand = (4 * dx, 4 * dy)
-            cost = int(np.abs(
-                blk_src - _mc_luma(ref, y0, x0, cand, size)).sum())
-            if best_cost is None or cost < best_cost:
-                best_mv, best_cost = cand, cost
-    return _refine_subpel(ref, blk_src, y0, x0, best_mv, best_cost)
-
-
-def _search_partitions(ref: np.ndarray, blk: np.ndarray, y0: int, x0: int,
-                       search_range: int, subparts: bool = False) -> dict:
-    """One shared integer-grid scan scoring the 16x16 AND all four half
-    partitions at once (each candidate's half-SADs are slices of the
-    same |blk - MC| map — integer-MV MC of a sub-block equals the slice
-    of the full-block MC, clamping included). Returns INTEGER-stage
-    (mv, sad) per key; the caller picks the macroblock partitioning on
-    these and refines only the chosen partitions (_refine_subpel) —
-    sub-pel refinement is ~10x the cost of an integer probe, so
-    refining all five first would triple the search bill for a
-    decision the integer SADs already settle.
-
-    subparts=True additionally tracks every sub-8x8 shape from the
-    same scan's per-4x4-block SAD grid: keys "qYX_84t"/"qYX_84b"
-    (8x4), "qYX_48l"/"qYX_48r" (4x8), and "qYX_44_i" (4x4, raster i)
-    per quadrant — the P_8x8 sub-partition decision then costs no
-    extra MC."""
-    keys = ("full", "top", "bot", "left", "right",
-            "q00", "q01", "q10", "q11")
-    best = {k: ((0, 0), None) for k in keys}
-    if subparts:
-        for qy in range(2):
-            for qx in range(2):
-                p = f"q{qy}{qx}"
-                for suf in ("_84t", "_84b", "_48l", "_48r",
-                            "_44_0", "_44_1", "_44_2", "_44_3"):
-                    best[p + suf] = ((0, 0), None)
-    for dy in range(-search_range, search_range + 1):
-        for dx in range(-search_range, search_range + 1):
-            cand = (4 * dx, 4 * dy)
-            d = np.abs(blk - _mc_luma(ref, y0, x0, cand))
-            if subparts:
-                bg = d.reshape(4, 4, 4, 4).sum(axis=(1, 3))
-                q00 = int(bg[0, 0] + bg[0, 1] + bg[1, 0] + bg[1, 1])
-                q01 = int(bg[0, 2] + bg[0, 3] + bg[1, 2] + bg[1, 3])
-                q10 = int(bg[2, 0] + bg[2, 1] + bg[3, 0] + bg[3, 1])
-                q11 = int(bg[2, 2] + bg[2, 3] + bg[3, 2] + bg[3, 3])
-            else:
-                q00 = int(d[:8, :8].sum())
-                q01 = int(d[:8, 8:].sum())
-                q10 = int(d[8:, :8].sum())
-                q11 = int(d[8:, 8:].sum())
-            scores = list(zip(keys, (q00 + q01 + q10 + q11,
-                                     q00 + q01, q10 + q11,
-                                     q00 + q10, q01 + q11,
-                                     q00, q01, q10, q11)))
-            if subparts:
-                for qy in range(2):
-                    for qx in range(2):
-                        b00 = int(bg[2 * qy, 2 * qx])
-                        b01 = int(bg[2 * qy, 2 * qx + 1])
-                        b10 = int(bg[2 * qy + 1, 2 * qx])
-                        b11 = int(bg[2 * qy + 1, 2 * qx + 1])
-                        p = f"q{qy}{qx}"
-                        scores += [
-                            (p + "_84t", b00 + b01), (p + "_84b", b10 + b11),
-                            (p + "_48l", b00 + b10), (p + "_48r", b01 + b11),
-                            (p + "_44_0", b00), (p + "_44_1", b01),
-                            (p + "_44_2", b10), (p + "_44_3", b11),
-                        ]
-            for k, s in scores:
-                if best[k][1] is None or s < best[k][1]:
-                    best[k] = (cand, s)
-    return best
-
-
-def _implicit_weights(poc_cur: int, poc0: int, poc1: int
-                      ) -> tuple[int, int]:
-    """§8.4.2.3.1 implicit bi-prediction weights from POC distances:
-    w1 = DistScaleFactor >> 2, w0 = 64 - w1 (logWD 5, zero offsets),
-    falling back to the default (32, 32) when the references share a
-    POC or the scale leaves [-64, 128]. Derived on BOTH sides — the
-    bitstream carries no weight table."""
-    if poc1 == poc0:
-        return 32, 32
-    w1 = _dist_scale_factor(poc_cur, poc0, poc1) >> 2
-    if w1 < -64 or w1 > 128:
-        return 32, 32
-    return 64 - w1, w1
-
-
-def _encode_bslice(
-    ref0: tuple[np.ndarray, np.ndarray, np.ndarray],
-    ref1: tuple[np.ndarray, np.ndarray, np.ndarray],
-    yuv: tuple[np.ndarray, np.ndarray, np.ndarray],
-    qp: int,
-    frame_num: int,
-    search_range: int = 4,
-    ref_slice: bool = False,
-    col_info: dict | None = None,
-    poc_lsb: int | None = None,
-    direct_mode: str = "spatial",
-    dsf: int | None = None,
-    bwp: dict | None = None,
-) -> tuple[tuple[np.ndarray, np.ndarray, np.ndarray], bytes, dict]:
-    """Encode one B slice: per MB, derive the direct motion — SPATIAL
-    (§8.4.1.2.2: col_info = L1[0]'s 4x4-granular DPB motion record;
-    colZeroFlag zeroes each 8x8 quadrant independently per
-    direct_8x8_inference) or TEMPORAL (direct_mode="temporal",
-    §8.4.1.2.3: per-quadrant mvCol from the colocated corner blocks
-    scaled by `dsf` = the precomputed DistScaleFactor; requires a
-    poc_type-0 stream where RefPicList1[0] is the future reference) —
-    and pick the cheapest of B_Direct_16x16, B_L0_16x16 (vs ref0),
-    B_L1_16x16 (vs ref1), B_Bi_16x16 (their average); ties prefer
-    Direct < L0 < L1 < Bi (Direct writes no MVD). A direct MB whose
-    residual quantizes to all-zero (luma AND chroma) is emitted as
-    B_Skip via mb_skip_run. Chroma rides each mode's luma motion
-    (per-quadrant for direct, per-partition for types 4-7) through
-    §8.4.2.2.2 with §8.4.2.3 bi-averaging, plus the §8.5.11 residual.
-    Returns (reconstruction (y, cb, cr), RBSP, stats)."""
-    y_plane, cb_plane, cr_plane = yuv
-    h, w_ = y_plane.shape
-    mbs_w, mbs_h = w_ // 16, h // 16
-    if col_info is None:
-        col_info = _intra_motion_info(mbs_h, mbs_w)
-    w = BitWriter()
-    w.ue(0)                 # first_mb_in_slice
-    w.ue(6)                 # slice_type B (all slices)
-    w.ue(0)                 # pps id
-    w.u(frame_num & 15, 4)  # frame_num
-    if poc_lsb is not None:  # SPS poc_type 0
-        w.u(poc_lsb & ((1 << _POC_LSB_BITS) - 1), _POC_LSB_BITS)
-    if direct_mode == "temporal":
-        if dsf is None:
-            raise ValueError("temporal direct needs a DistScaleFactor")
-        w.u(0, 1)           # direct_spatial_mv_pred_flag = 0 (temporal)
-    else:
-        w.u(1, 1)           # direct_spatial_mv_pred_flag = 1 (spatial)
-    w.u(0, 1)               # num_ref_idx_active_override_flag
-    w.u(0, 1)               # ref_pic_list_modification_flag_l0
-    w.u(0, 1)               # ref_pic_list_modification_flag_l1
-    if bwp is not None and "implicit" not in bwp:
-        # pred_weight_table (§7.3.3.2): explicit weights for BOTH
-        # lists' single references (weighted_bipred_idc = 1 PPS)
-        w.ue(bwp["logwd_y"])
-        w.ue(bwp["logwd_c"])
-        for lx in (0, 1):
-            w.u(1, 1)       # luma_weight_lX_flag
-            w.se(bwp[f"y{lx}"][0])
-            w.se(bwp[f"y{lx}"][1])
-            w.u(1, 1)       # chroma_weight_lX_flag
-            for comp in ("cb", "cr"):
-                w.se(bwp[f"{comp}{lx}"][0])
-                w.se(bwp[f"{comp}{lx}"][1])
-    if ref_slice:
-        w.u(0, 1)           # adaptive_ref_pic_marking_mode_flag
-    w.se(qp - 26)
-    w.ue(1)                 # deblocking off
-
-    if bwp is None:
-        wpy = wpcb = wpcr = None
-    elif "implicit" in bwp:
-        # §8.4.2.3.1 implicit weights: derived, never transmitted —
-        # one (w0, w1) pair at logWD 5 for every plane, bi-only
-        w0i, w1i = bwp["implicit"]
-        wpy = wpcb = wpcr = ((w0i, 0), (w1i, 0), 5, "bi")
-    else:
-        wpy = (bwp["y0"], bwp["y1"], bwp["logwd_y"])
-        wpcb = (bwp["cb0"], bwp["cb1"], bwp["logwd_c"])
-        wpcr = (bwp["cr0"], bwp["cr1"], bwp["logwd_c"])
-    src = y_plane.astype(np.int64)
-    src_cb = cb_plane.astype(np.int64)
-    src_cr = cr_plane.astype(np.int64)
-    r0 = ref0[0].astype(np.int64)
-    r1 = ref1[0].astype(np.int64)
-    refs_c = {  # per (list, component) chroma reference planes
-        (0, "cb"): ref0[1].astype(np.int64),
-        (0, "cr"): ref0[2].astype(np.int64),
-        (1, "cb"): ref1[1].astype(np.int64),
-        (1, "cr"): ref1[2].astype(np.int64),
-    }
-    recon = np.zeros((h, w_), dtype=np.int64)
-    rec_cb = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    rec_cr = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    tc_map = np.zeros((h // 4, w_ // 4), dtype=np.int64)
-    tc_cb = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    tc_cr = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    qpc = chroma_qp(qp)
-    mf0 = _MotionField(mbs_h, mbs_w)
-    mf1 = _MotionField(mbs_h, mbs_w)
-    stats = {"n_skip": 0, "n_direct": 0, "n_l0": 0, "n_l1": 0, "n_bi": 0,
-             "n_l0_part": 0, "n_l1_part": 0, "n_mixed_part": 0,
-             "n_bi_part": 0, "n_b8x8": 0, "n_b8_split": 0}
-    skip_run = 0
-    # same qp-scaled two-partition deadband as the P encoder
-    part_pen = 16 << (qp // 6)
-    # integer-search partition keys per orientation (sr0/sr1 layout)
-    part_keys_of = (("top", "bot"), ("left", "right"))
-
-    def mb_levels(pred: np.ndarray, y0: int, x0: int) -> tuple[list, int]:
-        levels, cbp = [], 0
-        for blk_i in range(16):
-            bx, by = LUMA_BLOCK_XY[blk_i]
-            res = (src[y0 + by : y0 + by + 4, x0 + bx : x0 + bx + 4]
-                   - pred[by : by + 4, bx : bx + 4])
-            lv = quantize_4x4(forward_transform_4x4(res), qp, intra=False)
-            levels.append(lv)
-            if lv.any():
-                cbp |= 1 << (2 * (by // 8) + (bx // 8))
-        return levels, cbp
-
-    def direct_pred(u0, u1, dmv0, dmv1, zq, y0, x0) -> np.ndarray:
-        def one(m0, m1, py, px, size):
-            return _bi_luma(r0, r1, u0, u1, m0, m1, py, px, size, wpy)
-
-        if zq.all():
-            return one((0, 0), (0, 0), y0, x0, 16)
-        if not zq.any():
-            return one(dmv0, dmv1, y0, x0, 16)
-        pred = np.empty((16, 16), dtype=np.int64)
-        for qy in range(2):
-            for qx in range(2):
-                m0 = (0, 0) if zq[qy, qx] else dmv0
-                m1 = (0, 0) if zq[qy, qx] else dmv1
-                pred[8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8] = one(
-                    m0, m1, y0 + 8 * qy, x0 + 8 * qx, 8)
-        return pred
-
-    def commit_direct(mbx, mby, u0, u1, dmv0, dmv1, zq) -> None:
-        y4, x4 = mby * 4, mbx * 4
-        for u, mv, mf in ((u0, dmv0, mf0), (u1, dmv1, mf1)):
-            if not u:
-                mf.fill(y4, x4, 4, 4, (0, 0), used=False)
-                continue
-            for qy in range(2):
-                for qx in range(2):
-                    q = (0, 0) if zq[qy, qx] else mv
-                    mf.fill(y4 + 2 * qy, x4 + 2 * qx, 2, 2, q)
-
-    for mby in range(mbs_h):
-        for mbx in range(mbs_w):
-            y0, x0 = mby * 16, mbx * 16
-            y4, x4 = mby * 4, mbx * 4
-            cy, cx = mby * 8, mbx * 8
-            blk = src[y0 : y0 + 16, x0 : x0 + 16]
-            if direct_mode == "temporal":
-                m0q, m1q = _temporal_direct_mb(
-                    col_info["mv4"], col_info["intra4"], mbx, mby, dsf
-                )
-                pd = _quad_pred16(r0, r1, m0q, m1q, y0, x0, wpy)
-                pd_cb = _quad_pred_chroma8(
-                    refs_c[(0, "cb")], refs_c[(1, "cb")], m0q, m1q,
-                    cy, cx, wpcb)
-                pd_cr = _quad_pred_chroma8(
-                    refs_c[(0, "cr")], refs_c[(1, "cr")], m0q, m1q,
-                    cy, cx, wpcr)
-
-                def commit_direct_any(y4=y4, x4=x4, m0q=m0q, m1q=m1q):
-                    for qy in range(2):
-                        for qx in range(2):
-                            mf0.fill(y4 + 2 * qy, x4 + 2 * qx, 2, 2,
-                                     m0q[qy][qx])
-                            mf1.fill(y4 + 2 * qy, x4 + 2 * qx, 2, 2,
-                                     m1q[qy][qx])
-
-                def dq_mv(lx, qy, qx, m0q=m0q, m1q=m1q):
-                    return (m0q, m1q)[lx][qy][qx]
-
-                dq_u = (True, True)
-            else:
-                u0, u1, dmv0, dmv1, zq = _direct_spatial(
-                    mf0, mf1, mbx, mby, col_info["mv4"], col_info["intra4"]
-                )
-                pd = direct_pred(u0, u1, dmv0, dmv1, zq, y0, x0)
-                pd_cb = _direct_chroma(refs_c[(0, "cb")],
-                                       refs_c[(1, "cb")],
-                                       u0, u1, dmv0, dmv1, zq, cy, cx,
-                                       wpcb)
-                pd_cr = _direct_chroma(refs_c[(0, "cr")],
-                                       refs_c[(1, "cr")],
-                                       u0, u1, dmv0, dmv1, zq, cy, cx,
-                                       wpcr)
-
-                def commit_direct_any(mbx=mbx, mby=mby, u0=u0, u1=u1,
-                                      dmv0=dmv0, dmv1=dmv1, zq=zq):
-                    commit_direct(mbx, mby, u0, u1, dmv0, dmv1, zq)
-
-                def dq_mv(lx, qy, qx, u0=u0, u1=u1, dmv0=dmv0,
-                          dmv1=dmv1, zq=zq):
-                    if not (u0, u1)[lx]:
-                        return None
-                    return (0, 0) if zq[qy, qx] else (dmv0, dmv1)[lx]
-
-                dq_u = (u0, u1)
-            lv_d, cbp_d = mb_levels(pd, y0, x0)
-            cc_d, dcs_d, acs_d = _quantize_chroma_mb(
-                src_cb[cy : cy + 8, cx : cx + 8] - pd_cb,
-                src_cr[cy : cy + 8, cx : cx + 8] - pd_cr,
-                qpc, intra=False,
-            )
-
-            if cbp_d == 0 and cc_d == 0:
-                # B_Skip: direct motion, no residual, nothing but the run
-                skip_run += 1
-                stats["n_skip"] += 1
-                recon[y0 : y0 + 16, x0 : x0 + 16] = np.clip(pd, 0, 255)
-                rec_cb[cy : cy + 8, cx : cx + 8] = np.clip(pd_cb, 0, 255)
-                rec_cr[cy : cy + 8, cx : cx + 8] = np.clip(pd_cr, 0, 255)
-                tc_map[y0 // 4 : y0 // 4 + 4, x0 // 4 : x0 // 4 + 4] = 0
-                tc_cb[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-                tc_cr[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-                commit_direct_any()
-                continue
-            cd = int(np.abs(blk - pd).sum())
-            sr0 = _search_partitions(r0, blk, y0, x0, search_range,
-                                     subparts=True)
-            sr1 = _search_partitions(r1, blk, y0, x0, search_range,
-                                     subparts=True)
-            mv0, c0 = _refine_subpel(r0, blk, y0, x0, *sr0["full"])
-            mv1, c1 = _refine_subpel(r1, blk, y0, x0, *sr1["full"])
-            p0 = _bi_luma(r0, r1, True, False, mv0, mv1, y0, x0, 16,
-                          wpy)
-            p1 = _bi_luma(r0, r1, False, True, mv0, mv1, y0, x0, 16,
-                          wpy)
-            pbi = _bi_luma(r0, r1, True, True, mv0, mv1, y0, x0, 16,
-                           wpy)
-            cbi = int(np.abs(blk - pbi).sum())
-            slices = {
-                "top": (blk[:8, :], y0, x0),
-                "bot": (blk[8:, :], y0 + 8, x0),
-                "left": (blk[:, :8], y0, x0),
-                "right": (blk[:, 8:], y0, x0 + 8),
-                "q00": (blk[:8, :8], y0, x0),
-                "q01": (blk[:8, 8:], y0, x0 + 8),
-                "q10": (blk[8:, :8], y0 + 8, x0),
-                "q11": (blk[8:, 8:], y0 + 8, x0 + 8),
-            }
-
-            def bi_part_sad(key):
-                # bi SAD at the INTEGER search MVs (cheap slices) —
-                # refinement happens only for the chosen mode
-                sblk, py, px = slices[key]
-                sz = sblk.shape
-                pb = (_mc_luma(r0, py, px, sr0[key][0], sz)
-                      + _mc_luma(r1, py, px, sr1[key][0], sz) + 1) >> 1
-                return int(np.abs(sblk - pb).sum())
-
-            bi_sads = {}
-            cands = [(cd, 0), (c0, 1), (c1, 2), (cbi, 3)]
-            for mbt, (orient, pm0, pm1) in B_TWOPART.items():
-                keys = part_keys_of[orient]
-                cost = 0
-                for pm, key in zip((pm0, pm1), keys):
-                    if pm == 0:
-                        cost += sr0[key][1]
-                    elif pm == 1:
-                        cost += sr1[key][1]
-                    else:
-                        if key not in bi_sads:
-                            bi_sads[key] = bi_part_sad(key)
-                        cost += bi_sads[key]
-                n_mvd = (2 if pm0 == 2 else 1) + (2 if pm1 == 2 else 1)
-                cands.append((cost + part_pen * (n_mvd - 1), mbt))
-            # B_8x8 (Table 7-18): per-quadrant cheapest of the whole-
-            # quadrant modes (Direct / L0 / L1 / Bi 8x8, sub 0-3) AND
-            # the sub-split modes (L0/L1/Bi x 8x4/4x8/4x4, sub 4-12 —
-            # every SAD a slice of the shared integer scan, bi sub
-            # SADs at the integer search MVs); priced at part_pen per
-            # MVD plus one part_pen for the four sub_mb_type fields
-
-            def bi_sub_sad(qy, qx, sdx, sdy, pw_, ph_, skey):
-                py = y0 + 8 * qy + sdy
-                px = x0 + 8 * qx + sdx
-                sblk = blk[8 * qy + sdy : 8 * qy + sdy + ph_,
-                           8 * qx + sdx : 8 * qx + sdx + pw_]
-                pb = (_mc_luma(r0, py, px, sr0[skey][0], (ph_, pw_))
-                      + _mc_luma(r1, py, px, sr1[skey][0], (ph_, pw_))
-                      + 1) >> 1
-                return int(np.abs(sblk - pb).sum())
-
-            b8_cfg, b8_cost = [], 0
-            for qi, qkey in enumerate(("q00", "q01", "q10", "q11")):
-                qy, qx = qi // 2, qi % 2
-                d_sad = int(np.abs(
-                    blk[8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8]
-                    - pd[8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8]
-                ).sum())
-                if qkey not in bi_sads:
-                    bi_sads[qkey] = bi_part_sad(qkey)
-                quad_cands = [
-                    (d_sad, 0),
-                    (sr0[qkey][1] + part_pen, 1),
-                    (sr1[qkey][1] + part_pen, 2),
-                    (bi_sads[qkey] + 2 * part_pen, 3),
-                ]
-                for st, (pm, geom) in B_SUB_SPLIT.items():
-                    cost = 0
-                    for sdx, sdy, pw_, ph_, suf in geom:
-                        skey = qkey + suf
-                        if pm == 0:
-                            cost += sr0[skey][1] + part_pen
-                        elif pm == 1:
-                            cost += sr1[skey][1] + part_pen
-                        else:
-                            if skey not in bi_sads:
-                                bi_sads[skey] = bi_sub_sad(
-                                    qy, qx, sdx, sdy, pw_, ph_, skey)
-                            cost += bi_sads[skey] + 2 * part_pen
-                    quad_cands.append((cost, st))
-                c, st = min(quad_cands)
-                b8_cfg.append(st)
-                b8_cost += c
-            cands.append((b8_cost + part_pen, 22))
-            choice = min(cands)[1]
-            w.ue(skip_run)  # mb_skip_run
-            skip_run = 0
-            # mb_type: 0 B_Direct, 1 B_L0, 2 B_L1, 3 B_Bi,
-            # 4-21 two-partition modes (Table 7-14)
-            w.ue(choice)
-            if choice == 22:
-                for st in b8_cfg:
-                    w.ue(st)  # sub_mb_type (Table 7-18)
-                stats["n_b8_split"] += sum(st >= 4 for st in b8_cfg)
-                # refined MVs per (list, quadrant, sub-part) in use
-                qmvs = [[None] * 4, [None] * 4]
-                for qi, qkey in enumerate(("q00", "q01", "q10", "q11")):
-                    st = b8_cfg[qi]
-                    if st == 0:
-                        continue
-                    qy, qx = qi // 2, qi % 2
-                    for lx, (srx, rx) in enumerate(((sr0, r0),
-                                                    (sr1, r1))):
-                        if not _b_sub_uses(st, lx):
-                            continue
-                        mvs_q = []
-                        for sdx, sdy, pw_, ph_, suf in _b_sub_geom(st):
-                            skey = qkey + suf
-                            sblk = blk[
-                                8 * qy + sdy : 8 * qy + sdy + ph_,
-                                8 * qx + sdx : 8 * qx + sdx + pw_]
-                            mvs_q.append(_refine_subpel(
-                                rx, sblk, y0 + 8 * qy + sdy,
-                                x0 + 8 * qx + sdx, *srx[skey])[0])
-                        qmvs[lx][qi] = mvs_q
-                # list-major MVD walk over quadrants then sub-parts
-                # (§7.3.5.1), mirroring the decoder
-                for lx, mfx in ((0, mf0), (1, mf1)):
-                    for qi, st in enumerate(b8_cfg):
-                        qy, qx = qi // 2, qi % 2
-                        py4, px4 = y4 + 2 * qy, x4 + 2 * qx
-                        if st == 0:
-                            dmv = dq_mv(lx, qy, qx)
-                            if dmv is None:
-                                mfx.fill(py4, px4, 2, 2, (0, 0),
-                                         used=False)
-                            else:
-                                mfx.fill(py4, px4, 2, 2, dmv)
-                        elif _b_sub_uses(st, lx):
-                            for si, (sdx, sdy, pw_, ph_, _suf) in \
-                                    enumerate(_b_sub_geom(st)):
-                                spy4 = py4 + sdy // 4
-                                spx4 = px4 + sdx // 4
-                                mvp = _mvp_partition(
-                                    mfx, spx4, spy4, pw_ // 4, "sub")
-                                mv = qmvs[lx][qi][si]
-                                w.se(int(mv[0] - mvp[0]))
-                                w.se(int(mv[1] - mvp[1]))
-                                mfx.fill(spy4, spx4, ph_ // 4,
-                                         pw_ // 4, mv)
-                        else:
-                            mfx.fill(py4, px4, 2, 2, (0, 0), used=False)
-                pred = np.empty((16, 16), dtype=np.int64)
-                pred_cb = np.empty((8, 8), dtype=np.int64)
-                pred_cr = np.empty((8, 8), dtype=np.int64)
-                for qi, st in enumerate(b8_cfg):
-                    qy, qx = qi // 2, qi % 2
-                    if st == 0:
-                        # direct quadrant: slice of the MB direct pred
-                        pred[8 * qy : 8 * qy + 8,
-                             8 * qx : 8 * qx + 8] = pd[
-                            8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8]
-                        pred_cb[4 * qy : 4 * qy + 4,
-                                4 * qx : 4 * qx + 4] = pd_cb[
-                            4 * qy : 4 * qy + 4, 4 * qx : 4 * qx + 4]
-                        pred_cr[4 * qy : 4 * qy + 4,
-                                4 * qx : 4 * qx + 4] = pd_cr[
-                            4 * qy : 4 * qy + 4, 4 * qx : 4 * qx + 4]
-                        continue
-                    u0q, u1q = _b_sub_uses(st, 0), _b_sub_uses(st, 1)
-                    for si, (sdx, sdy, pw_, ph_, _suf) in \
-                            enumerate(_b_sub_geom(st)):
-                        ly = y0 + 8 * qy + sdy
-                        lxo = x0 + 8 * qx + sdx
-                        m0q_ = qmvs[0][qi][si] if u0q else (0, 0)
-                        m1q_ = qmvs[1][qi][si] if u1q else (0, 0)
-                        pred[8 * qy + sdy : 8 * qy + sdy + ph_,
-                             8 * qx + sdx : 8 * qx + sdx + pw_] \
-                            = _bi_luma(r0, r1, u0q, u1q, m0q_, m1q_,
-                                       ly, lxo, (ph_, pw_), wpy)
-                        csz = (ph_ // 2, pw_ // 2)
-                        cyq = cy + 4 * qy + sdy // 2
-                        cxq = cx + 4 * qx + sdx // 2
-                        pred_cb[4 * qy + sdy // 2 :
-                                4 * qy + sdy // 2 + ph_ // 2,
-                                4 * qx + sdx // 2 :
-                                4 * qx + sdx // 2 + pw_ // 2] = \
-                            _bi_chroma(
-                                refs_c[(0, "cb")], refs_c[(1, "cb")],
-                                u0q, u1q, m0q_, m1q_, cyq, cxq, csz,
-                                wpcb)
-                        pred_cr[4 * qy + sdy // 2 :
-                                4 * qy + sdy // 2 + ph_ // 2,
-                                4 * qx + sdx // 2 :
-                                4 * qx + sdx // 2 + pw_ // 2] = \
-                            _bi_chroma(
-                                refs_c[(0, "cr")], refs_c[(1, "cr")],
-                                u0q, u1q, m0q_, m1q_, cyq, cxq, csz,
-                                wpcr)
-            elif choice >= 4:
-                orient, pm0, pm1 = B_TWOPART[choice]
-                parts = B_PART_GEOM[orient]
-                pmodes = (pm0, pm1)
-                keys = part_keys_of[orient]
-                # refined MV per (list, partition) actually in use
-                mvs = [[None, None], [None, None]]
-                for pi, key in enumerate(keys):
-                    if pmodes[pi] in (0, 2):
-                        mvs[0][pi] = _refine_subpel(
-                            r0, *slices[key], *sr0[key])[0]
-                    if pmodes[pi] in (1, 2):
-                        mvs[1][pi] = _refine_subpel(
-                            r1, *slices[key], *sr1[key])[0]
-                # MVDs list-major (§7.3.5.1), MVP interleaved with the
-                # list's own commits — mirror of the decoder
-                for lx, mfx in ((0, mf0), (1, mf1)):
-                    for pi, (tag, dx, dy, pw, ph) in enumerate(parts):
-                        px4, py4 = (x0 + dx) // 4, (y0 + dy) // 4
-                        if pmodes[pi] == lx or pmodes[pi] == 2:
-                            mvp = _mvp_partition(mfx, px4, py4,
-                                                 pw // 4, tag)
-                            mv = mvs[lx][pi]
-                            w.se(int(mv[0] - mvp[0]))
-                            w.se(int(mv[1] - mvp[1]))
-                            mfx.fill(py4, px4, ph // 4, pw // 4, mv)
-                        else:
-                            mfx.fill(py4, px4, ph // 4, pw // 4,
-                                     (0, 0), used=False)
-                pred = np.empty((16, 16), dtype=np.int64)
-                pred_cb = np.empty((8, 8), dtype=np.int64)
-                pred_cr = np.empty((8, 8), dtype=np.int64)
-                for pi, (tag, dx, dy, pw, ph) in enumerate(parts):
-                    u0p = pmodes[pi] in (0, 2)
-                    u1p = pmodes[pi] in (1, 2)
-                    m0p = mvs[0][pi] or (0, 0)
-                    m1p = mvs[1][pi] or (0, 0)
-                    pred[dy : dy + ph, dx : dx + pw] = _bi_luma(
-                        r0, r1, u0p, u1p, m0p, m1p,
-                        y0 + dy, x0 + dx, (ph, pw), wpy)
-                    csz = (ph // 2, pw // 2)
-                    pred_cb[dy // 2 : dy // 2 + ph // 2,
-                            dx // 2 : dx // 2 + pw // 2] = _bi_chroma(
-                        refs_c[(0, "cb")], refs_c[(1, "cb")], u0p, u1p,
-                        m0p, m1p, cy + dy // 2, cx + dx // 2, csz,
-                        wpcb)
-                    pred_cr[dy // 2 : dy // 2 + ph // 2,
-                            dx // 2 : dx // 2 + pw // 2] = _bi_chroma(
-                        refs_c[(0, "cr")], refs_c[(1, "cr")], u0p, u1p,
-                        m0p, m1p, cy + dy // 2, cx + dx // 2, csz,
-                        wpcr)
-            else:
-                pred = (pd, p0, p1, pbi)[choice]
-                if choice in (1, 3):
-                    mvp = _mvp_partition(mf0, x4, y4, 4, "16x16")
-                    w.se(int(mv0[0] - mvp[0]))
-                    w.se(int(mv0[1] - mvp[1]))
-                if choice in (2, 3):
-                    mvp = _mvp_partition(mf1, x4, y4, 4, "16x16")
-                    w.se(int(mv1[0] - mvp[0]))
-                    w.se(int(mv1[1] - mvp[1]))
-                if choice == 0:
-                    pred_cb, pred_cr = pd_cb, pd_cr
-                else:
-                    u0c, u1c = choice in (1, 3), choice in (2, 3)
-                    pred_cb = _bi_chroma(refs_c[(0, "cb")],
-                                         refs_c[(1, "cb")],
-                                         u0c, u1c, mv0, mv1, cy, cx, 8,
-                                         wpcb)
-                    pred_cr = _bi_chroma(refs_c[(0, "cr")],
-                                         refs_c[(1, "cr")],
-                                         u0c, u1c, mv0, mv1, cy, cx, 8,
-                                         wpcr)
-            if choice == 0:
-                levels, cbp = lv_d, cbp_d
-                cc, dcs, acs = cc_d, dcs_d, acs_d
-            else:
-                levels, cbp = mb_levels(pred, y0, x0)
-                cc, dcs, acs = _quantize_chroma_mb(
-                    src_cb[cy : cy + 8, cx : cx + 8] - pred_cb,
-                    src_cr[cy : cy + 8, cx : cx + 8] - pred_cr,
-                    qpc, intra=False,
-                )
-            cbp |= cc << 4
-            w.ue(_CBP_INTER_INV[cbp])
-            if cbp:
-                w.se(0)  # mb_qp_delta
-            for blk_i in range(16):
-                bx, by = LUMA_BLOCK_XY[blk_i]
-                y, x = y0 + by, x0 + bx
-                group = 1 << (2 * (by // 8) + (bx // 8))
-                if cbp & group:
-                    nc = _neighbor_nc(tc_map, y // 4, x // 4)
-                    tc = encode_residual_block(w, levels[blk_i], nc)
-                    tc_map[y // 4, x // 4] = tc
-                    res = inverse_transform_4x4(
-                        dequantize_4x4(levels[blk_i], qp))
-                else:
-                    tc_map[y // 4, x // 4] = 0
-                    res = 0
-                recon[y : y + 4, x : x + 4] = np.clip(
-                    pred[by : by + 4, bx : bx + 4] + res, 0, 255)
-            _write_chroma_residual(w, cc, dcs, acs, tc_cb, tc_cr,
-                                   cy // 4, cx // 4)
-            rec_cb[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-                pred_cb, dcs["cb"], acs["cb"], qpc)
-            rec_cr[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-                pred_cr, dcs["cr"], acs["cr"], qpc)
-            if choice == 0:
-                commit_direct_any()
-            elif choice >= 4:
-                pass  # two-partition motion committed per list above
-            else:
-                mf0.fill(y4, x4, 4, 4, mv0, used=choice in (1, 3))
-                mf1.fill(y4, x4, 4, 4, mv1, used=choice in (2, 3))
-            stats[_b_mode_key(choice)] += 1
-    if skip_run:
-        w.ue(skip_run)
-    return ((recon.astype(np.uint8), rec_cb.astype(np.uint8),
-             rec_cr.astype(np.uint8)), w.rbsp(), stats)
-
-
-def _decode_bslice(r: BitReader, sps: dict, pps: dict,
-                   ref0: tuple[np.ndarray, np.ndarray, np.ndarray],
-                   ref1: tuple[np.ndarray, np.ndarray, np.ndarray],
-                   ref_idc: int,
-                   col_info: dict | None = None,
-                   tdir: dict | None = None,
-                   ) -> tuple[tuple, int, dict, dict, int | None]:
-    """Decode one B slice against (L0[0]=ref0, L1[0]=ref1); col_info is
-    L1[0]'s DPB motion record for direct modes. `tdir` (poc_type-0
-    streams) supplies the POC context temporal direct needs:
-    {"max_lsb", "prev_msb", "prev_lsb", "poc_l0", "poc_col",
-    "col_ref_poc"}. first_mb and slice_type are already consumed.
-    → (recon, qp, mode_counts, motion_info, poc_lsb)."""
-    w_, h = sps["width"], sps["height"]
-    mbs_w, mbs_h = w_ // 16, h // 16
-    if col_info is None:
-        col_info = _intra_motion_info(mbs_h, mbs_w)
-    r.ue()  # pps id
-    r.u(sps["log2_max_frame_num"])
-    poc_lsb = (r.u(sps["log2_max_poc_lsb"])
-               if sps.get("poc_type", 2) == 0 else None)
-    spatial = r.u(1) == 1  # direct_spatial_mv_pred_flag
-    dsf = None
-    if not spatial:
-        if tdir is None or poc_lsb is None:
-            raise NotImplementedError(
-                "temporal direct requires a poc_type-0 stream with a "
-                "decoded reference on each POC side"
-            )
-        if tdir["col_ref_poc"] != tdir["poc_l0"]:
-            raise NotImplementedError(
-                "temporal direct with the colocated reference outside "
-                "list 0 unsupported"
-            )
-        poc_cur = _poc_from_lsb(poc_lsb, tdir["prev_msb"],
-                                tdir["prev_lsb"], tdir["max_lsb"])
-        dsf = _dist_scale_factor(poc_cur, tdir["poc_l0"],
-                                 tdir["poc_col"])
-    if r.u(1):
-        raise NotImplementedError("num_ref_idx_active override unsupported")
-    if r.u(1):
-        raise NotImplementedError("ref_pic_list_modification unsupported")
-    if r.u(1):
-        raise NotImplementedError("ref_pic_list_modification unsupported")
-    wpy = wpcb = wpcr = None
-    if pps.get("weighted_bipred_idc") == 2:
-        # §8.4.2.3.1 implicit weights: derived from the POC geometry,
-        # nothing transmitted; bi-only (uni predictions stay plain)
-        if tdir is None or poc_lsb is None:
-            raise NotImplementedError(
-                "implicit weighted bi-prediction requires a poc_type-0 "
-                "stream with decoded references on both POC sides"
-            )
-        poc_cur_w = _poc_from_lsb(poc_lsb, tdir["prev_msb"],
-                                  tdir["prev_lsb"], tdir["max_lsb"])
-        w0i, w1i = _implicit_weights(poc_cur_w, tdir["poc_l0"],
-                                     tdir["poc_col"])
-        wpy = wpcb = wpcr = ((w0i, 0), (w1i, 0), 5, "bi")
-    if pps.get("weighted_bipred"):
-        # pred_weight_table (§7.3.3.2) for BOTH lists; absent flags
-        # mean the 2^logWD identity with zero offset
-        lwy, lwc = r.ue(), r.ue()
-        wts = {}
-        for lx in (0, 1):
-            wy, oy = 1 << lwy, 0
-            if r.u(1):
-                wy, oy = r.se(), r.se()
-            wts[f"y{lx}"] = (wy, oy)
-            cbw, crw = (1 << lwc, 0), (1 << lwc, 0)
-            if r.u(1):
-                cbw = (r.se(), r.se())
-                crw = (r.se(), r.se())
-            wts[f"cb{lx}"] = cbw
-            wts[f"cr{lx}"] = crw
-        wpy = (wts["y0"], wts["y1"], lwy)
-        wpcb = (wts["cb0"], wts["cb1"], lwc)
-        wpcr = (wts["cr0"], wts["cr1"], lwc)
-    if ref_idc and r.u(1):
-        raise NotImplementedError("adaptive ref-pic marking unsupported")
-    qp = 26 + pps["pic_init_qp_delta"] + r.se()
-    if pps["deblocking_control"]:
-        if r.ue() != 1:
-            raise NotImplementedError(
-                "deblocking filter enabled — decode-without-deblock would "
-                "not be conformant"
-            )
-    r0 = ref0[0].astype(np.int64)
-    r1 = ref1[0].astype(np.int64)
-    refs_c = {
-        (0, "cb"): ref0[1].astype(np.int64),
-        (0, "cr"): ref0[2].astype(np.int64),
-        (1, "cb"): ref1[1].astype(np.int64),
-        (1, "cr"): ref1[2].astype(np.int64),
-    }
-    recon = np.zeros((h, w_), dtype=np.int64)
-    rec_cb = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    rec_cr = np.zeros((h // 2, w_ // 2), dtype=np.int64)
-    tc_map = np.zeros((h // 4, w_ // 4), dtype=np.int64)
-    tc_cb = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    tc_cr = np.zeros((h // 8, w_ // 8), dtype=np.int64)
-    qpc = chroma_qp(qp)
-    mf0 = _MotionField(mbs_h, mbs_w)
-    mf1 = _MotionField(mbs_h, mbs_w)
-    counts = {"n_skip": 0, "n_direct": 0, "n_l0": 0, "n_l1": 0, "n_bi": 0,
-              "n_l0_part": 0, "n_l1_part": 0, "n_mixed_part": 0,
-              "n_bi_part": 0, "n_b8x8": 0, "n_b8_split": 0}
-    n_mbs = mbs_h * mbs_w
-
-    def direct_motion(mbx: int, mby: int):
-        return _direct_spatial(
-            mf0, mf1, mbx, mby, col_info["mv4"], col_info["intra4"]
-        )
-
-    def derive_direct(mbx: int, mby: int):
-        """→ (pred, pred_cb, pred_cr, commit) for the slice's direct
-        mode — spatial (§8.4.1.2.2) or temporal (§8.4.1.2.3)."""
-        y0, x0 = mby * 16, mbx * 16
-        cy, cx = mby * 8, mbx * 8
-        if spatial:
-            u0, u1, dmv0, dmv1, zq = direct_motion(mbx, mby)
-            pred = direct_pred(u0, u1, dmv0, dmv1, zq, y0, x0)
-            pcb = _direct_chroma(refs_c[(0, "cb")], refs_c[(1, "cb")],
-                                 u0, u1, dmv0, dmv1, zq, cy, cx, wpcb)
-            pcr = _direct_chroma(refs_c[(0, "cr")], refs_c[(1, "cr")],
-                                 u0, u1, dmv0, dmv1, zq, cy, cx, wpcr)
-
-            def commit():
-                commit_direct(mbx, mby, u0, u1, dmv0, dmv1, zq)
-        else:
-            m0q, m1q = _temporal_direct_mb(
-                col_info["mv4"], col_info["intra4"], mbx, mby, dsf)
-            pred = _quad_pred16(r0, r1, m0q, m1q, y0, x0, wpy)
-            pcb = _quad_pred_chroma8(refs_c[(0, "cb")],
-                                     refs_c[(1, "cb")], m0q, m1q,
-                                     cy, cx, wpcb)
-            pcr = _quad_pred_chroma8(refs_c[(0, "cr")],
-                                     refs_c[(1, "cr")], m0q, m1q,
-                                     cy, cx, wpcr)
-
-            def commit():
-                y4, x4 = mby * 4, mbx * 4
-                for qy in range(2):
-                    for qx in range(2):
-                        mf0.fill(y4 + 2 * qy, x4 + 2 * qx, 2, 2,
-                                 m0q[qy][qx])
-                        mf1.fill(y4 + 2 * qy, x4 + 2 * qx, 2, 2,
-                                 m1q[qy][qx])
-        return pred, pcb, pcr, commit
-
-    def direct_pred(u0, u1, dmv0, dmv1, zq, y0, x0) -> np.ndarray:
-        def one(m0, m1, py, px, size):
-            return _bi_luma(r0, r1, u0, u1, m0, m1, py, px, size, wpy)
-
-        if zq.all():
-            return one((0, 0), (0, 0), y0, x0, 16)
-        if not zq.any():
-            return one(dmv0, dmv1, y0, x0, 16)
-        pred = np.empty((16, 16), dtype=np.int64)
-        for qy in range(2):
-            for qx in range(2):
-                m0 = (0, 0) if zq[qy, qx] else dmv0
-                m1 = (0, 0) if zq[qy, qx] else dmv1
-                pred[8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8] = one(
-                    m0, m1, y0 + 8 * qy, x0 + 8 * qx, 8)
-        return pred
-
-    def commit_direct(mbx, mby, u0, u1, dmv0, dmv1, zq) -> None:
-        y4, x4 = mby * 4, mbx * 4
-        for u, mv, mf in ((u0, dmv0, mf0), (u1, dmv1, mf1)):
-            if not u:
-                mf.fill(y4, x4, 4, 4, (0, 0), used=False)
-                continue
-            for qy in range(2):
-                for qx in range(2):
-                    q = (0, 0) if zq[qy, qx] else mv
-                    mf.fill(y4 + 2 * qy, x4 + 2 * qx, 2, 2, q)
-
-    addr = 0
-    while addr < n_mbs:
-        skip_run = r.ue()
-        if addr + skip_run > n_mbs:
-            raise ValueError("mb_skip_run overruns the picture")
-        for _ in range(skip_run):
-            mbx, mby = addr % mbs_w, addr // mbs_w
-            y0, x0 = mby * 16, mbx * 16
-            cy, cx = mby * 8, mbx * 8
-            pd, pd_cb, pd_cr, commit = derive_direct(mbx, mby)
-            recon[y0 : y0 + 16, x0 : x0 + 16] = np.clip(pd, 0, 255)
-            rec_cb[cy : cy + 8, cx : cx + 8] = np.clip(pd_cb, 0, 255)
-            rec_cr[cy : cy + 8, cx : cx + 8] = np.clip(pd_cr, 0, 255)
-            tc_map[y0 // 4 : y0 // 4 + 4, x0 // 4 : x0 // 4 + 4] = 0
-            tc_cb[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-            tc_cr[cy // 4 : cy // 4 + 2, cx // 4 : cx // 4 + 2] = 0
-            commit()
-            counts["n_skip"] += 1
-            addr += 1
-        if addr >= n_mbs:
-            break
-        mbx, mby = addr % mbs_w, addr // mbs_w
-        mb_type = r.ue()
-        if mb_type > 22:
-            raise NotImplementedError(
-                f"B mb_type {mb_type} unsupported"
-            )
-        y0, x0 = mby * 16, mbx * 16
-        y4, x4 = mby * 4, mbx * 4
-        cy, cx = mby * 8, mbx * 8
-        direct_commit = None
-        part_args = None
-        if mb_type == 0:
-            pred, pred_cb, pred_cr, direct_commit = derive_direct(mbx, mby)
-        elif mb_type == 22:
-            # B_8x8: per-quadrant sub_mb_type (Table 7-18; 0 Direct /
-            # 1-3 whole-quadrant L0/L1/Bi / 4-12 the sub-split modes
-            # L0/L1/Bi x 8x4/4x8/4x4)
-            sub_types = [r.ue() for _ in range(4)]
-            if any(st > 12 for st in sub_types):
-                raise NotImplementedError(
-                    f"invalid B sub_mb_type {max(sub_types)} "
-                    "(Table 7-18)"
-                )
-            counts["n_b8_split"] += sum(st >= 4 for st in sub_types)
-            # direct derivation BEFORE any of this MB's commits
-            if spatial:
-                du0, du1, ddmv0, ddmv1, dzq = direct_motion(mbx, mby)
-
-                def dq_mv(lx, qy, qx):
-                    if not (du0, du1)[lx]:
-                        return None
-                    return ((0, 0) if dzq[qy, qx]
-                            else (ddmv0, ddmv1)[lx])
-
-                def dq_pred(qy, qx, py, px, sz, planes):
-                    m0 = dq_mv(0, qy, qx) or (0, 0)
-                    m1 = dq_mv(1, qy, qx) or (0, 0)
-                    return _bi_luma(planes[0], planes[1], du0, du1,
-                                    m0, m1, py, px, sz, planes[3]) \
-                        if planes[2] else _bi_chroma(
-                            planes[0], planes[1], du0, du1, m0, m1,
-                            py, px, sz, planes[3])
-            else:
-                tm0q, tm1q = _temporal_direct_mb(
-                    col_info["mv4"], col_info["intra4"], mbx, mby, dsf)
-
-                def dq_mv(lx, qy, qx):
-                    return (tm0q, tm1q)[lx][qy][qx]
-
-                def dq_pred(qy, qx, py, px, sz, planes):
-                    if planes[2]:
-                        return _bi_luma(planes[0], planes[1], True,
-                                        True, tm0q[qy][qx],
-                                        tm1q[qy][qx], py, px, sz,
-                                        planes[3])
-                    return _bi_chroma(planes[0], planes[1], True, True,
-                                      tm0q[qy][qx], tm1q[qy][qx],
-                                      py, px, sz, planes[3])
-            # list-major MVDs over quadrants then sub-parts
-            # (§7.3.5.1); direct quadrants commit their derived
-            # motion in place
-            qmvs = [[None] * 4, [None] * 4]
-            for lx, mfx in ((0, mf0), (1, mf1)):
-                for qi, st in enumerate(sub_types):
-                    qy, qx = qi // 2, qi % 2
-                    py4, px4 = y4 + 2 * qy, x4 + 2 * qx
-                    if st == 0:
-                        dmv = dq_mv(lx, qy, qx)
-                        if dmv is None:
-                            mfx.fill(py4, px4, 2, 2, (0, 0), used=False)
-                        else:
-                            mfx.fill(py4, px4, 2, 2, dmv)
-                    elif _b_sub_uses(st, lx):
-                        mvs_q = []
-                        for sdx, sdy, pw_, ph_, _suf in _b_sub_geom(st):
-                            spy4, spx4 = py4 + sdy // 4, px4 + sdx // 4
-                            mvp = _mvp_partition(
-                                mfx, spx4, spy4, pw_ // 4, "sub")
-                            mvd = (r.se(), r.se())
-                            mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-                            mvs_q.append(mv)
-                            mfx.fill(spy4, spx4, ph_ // 4, pw_ // 4, mv)
-                        qmvs[lx][qi] = mvs_q
-                    else:
-                        mfx.fill(py4, px4, 2, 2, (0, 0), used=False)
-            pred = np.empty((16, 16), dtype=np.int64)
-            pred_cb = np.empty((8, 8), dtype=np.int64)
-            pred_cr = np.empty((8, 8), dtype=np.int64)
-            for qi, st in enumerate(sub_types):
-                qy, qx = qi // 2, qi % 2
-                ly, lxo = y0 + 8 * qy, x0 + 8 * qx
-                cyq, cxq = cy + 4 * qy, cx + 4 * qx
-                if st == 0:
-                    pred[8 * qy : 8 * qy + 8, 8 * qx : 8 * qx + 8] = \
-                        dq_pred(qy, qx, ly, lxo, 8, (r0, r1, True, wpy))
-                    pred_cb[4 * qy : 4 * qy + 4, 4 * qx : 4 * qx + 4] = \
-                        dq_pred(qy, qx, cyq, cxq, 4,
-                                (refs_c[(0, "cb")], refs_c[(1, "cb")],
-                                 False, wpcb))
-                    pred_cr[4 * qy : 4 * qy + 4, 4 * qx : 4 * qx + 4] = \
-                        dq_pred(qy, qx, cyq, cxq, 4,
-                                (refs_c[(0, "cr")], refs_c[(1, "cr")],
-                                 False, wpcr))
-                    continue
-                u0q, u1q = _b_sub_uses(st, 0), _b_sub_uses(st, 1)
-                for si, (sdx, sdy, pw_, ph_, _suf) in \
-                        enumerate(_b_sub_geom(st)):
-                    m0q_ = qmvs[0][qi][si] if u0q else (0, 0)
-                    m1q_ = qmvs[1][qi][si] if u1q else (0, 0)
-                    pred[8 * qy + sdy : 8 * qy + sdy + ph_,
-                         8 * qx + sdx : 8 * qx + sdx + pw_] = \
-                        _bi_luma(r0, r1, u0q, u1q, m0q_, m1q_,
-                                 ly + sdy, lxo + sdx, (ph_, pw_), wpy)
-                    csz = (ph_ // 2, pw_ // 2)
-                    pred_cb[4 * qy + sdy // 2 :
-                            4 * qy + sdy // 2 + ph_ // 2,
-                            4 * qx + sdx // 2 :
-                            4 * qx + sdx // 2 + pw_ // 2] = \
-                        _bi_chroma(refs_c[(0, "cb")], refs_c[(1, "cb")],
-                                   u0q, u1q, m0q_, m1q_,
-                                   cyq + sdy // 2, cxq + sdx // 2, csz,
-                                   wpcb)
-                    pred_cr[4 * qy + sdy // 2 :
-                            4 * qy + sdy // 2 + ph_ // 2,
-                            4 * qx + sdx // 2 :
-                            4 * qx + sdx // 2 + pw_ // 2] = \
-                        _bi_chroma(refs_c[(0, "cr")], refs_c[(1, "cr")],
-                                   u0q, u1q, m0q_, m1q_,
-                                   cyq + sdy // 2, cxq + sdx // 2, csz,
-                                   wpcr)
-            part_args = -1
-        elif mb_type >= 4:
-            orient, pm0, pm1 = B_TWOPART[mb_type]
-            parts = B_PART_GEOM[orient]
-            pmodes = (pm0, pm1)
-            # MVDs are LIST-major (§7.3.5.1): all L0 mvds in partition
-            # order, then all L1 mvds; each list's MVP derivation
-            # interleaves with its own commits
-            mvs = [[None, None], [None, None]]  # [list][part]
-            for lx, mfx in ((0, mf0), (1, mf1)):
-                for pi, (tag, dx, dy, pw, ph) in enumerate(parts):
-                    px4, py4 = (x0 + dx) // 4, (y0 + dy) // 4
-                    if pmodes[pi] == lx or pmodes[pi] == 2:
-                        mvp = _mvp_partition(mfx, px4, py4, pw // 4, tag)
-                        mvd = (r.se(), r.se())
-                        mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-                        mvs[lx][pi] = mv
-                        mfx.fill(py4, px4, ph // 4, pw // 4, mv)
-                    else:
-                        mfx.fill(py4, px4, ph // 4, pw // 4, (0, 0),
-                                 used=False)
-            pred = np.empty((16, 16), dtype=np.int64)
-            pred_cb = np.empty((8, 8), dtype=np.int64)
-            pred_cr = np.empty((8, 8), dtype=np.int64)
-            for pi, (tag, dx, dy, pw, ph) in enumerate(parts):
-                u0p = pmodes[pi] in (0, 2)
-                u1p = pmodes[pi] in (1, 2)
-                m0p = mvs[0][pi] or (0, 0)
-                m1p = mvs[1][pi] or (0, 0)
-                pred[dy : dy + ph, dx : dx + pw] = _bi_luma(
-                    r0, r1, u0p, u1p, m0p, m1p,
-                    y0 + dy, x0 + dx, (ph, pw), wpy)
-                csz = (ph // 2, pw // 2)
-                pred_cb[dy // 2 : dy // 2 + ph // 2,
-                        dx // 2 : dx // 2 + pw // 2] = _bi_chroma(
-                    refs_c[(0, "cb")], refs_c[(1, "cb")], u0p, u1p,
-                    m0p, m1p, cy + dy // 2, cx + dx // 2, csz, wpcb)
-                pred_cr[dy // 2 : dy // 2 + ph // 2,
-                        dx // 2 : dx // 2 + pw // 2] = _bi_chroma(
-                    refs_c[(0, "cr")], refs_c[(1, "cr")], u0p, u1p,
-                    m0p, m1p, cy + dy // 2, cx + dx // 2, csz, wpcr)
-            part_args = -1  # motion already committed per list above
-        else:
-            mv0 = mv1 = (0, 0)
-            u0 = mb_type in (1, 3)
-            u1 = mb_type in (2, 3)
-            if u0:
-                mvp = _mvp_partition(mf0, x4, y4, 4, "16x16")
-                mvd = (r.se(), r.se())
-                mv0 = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-            if u1:
-                mvp = _mvp_partition(mf1, x4, y4, 4, "16x16")
-                mvd = (r.se(), r.se())
-                mv1 = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-            pred = _bi_luma(r0, r1, u0, u1, mv0, mv1, y0, x0, 16, wpy)
-            pred_cb = _bi_chroma(refs_c[(0, "cb")], refs_c[(1, "cb")],
-                                 u0, u1, mv0, mv1, cy, cx, 8, wpcb)
-            pred_cr = _bi_chroma(refs_c[(0, "cr")], refs_c[(1, "cr")],
-                                 u0, u1, mv0, mv1, cy, cx, 8, wpcr)
-        cbp = _cbp_lookup(CBP_INTER, r.ue())
-        if cbp and r.se() != 0:
-            raise NotImplementedError("mb_qp_delta unsupported")
-        for blk_i in range(16):
-            bx, by = LUMA_BLOCK_XY[blk_i]
-            y, x = y0 + by, x0 + bx
-            group = 1 << (2 * (by // 8) + (bx // 8))
-            if cbp & group:
-                nc = _neighbor_nc(tc_map, y // 4, x // 4)
-                levels, tc = decode_residual_block(r, nc)
-                tc_map[y // 4, x // 4] = tc
-                res = inverse_transform_4x4(dequantize_4x4(levels, qp))
-            else:
-                tc_map[y // 4, x // 4] = 0
-                res = 0
-            recon[y : y + 4, x : x + 4] = np.clip(
-                pred[by : by + 4, bx : bx + 4] + res, 0, 255)
-        dcs, acs = _read_chroma_residual(r, cbp >> 4, tc_cb, tc_cr,
-                                         cy // 4, cx // 4)
-        rec_cb[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-            pred_cb, dcs["cb"], acs["cb"], qpc)
-        rec_cr[cy : cy + 8, cx : cx + 8] = _recon_chroma_blocks(
-            pred_cr, dcs["cr"], acs["cr"], qpc)
-        if direct_commit is not None:
-            direct_commit()
-        elif part_args is not None:
-            pass  # two-partition motion committed per list above
-        else:
-            mf0.fill(y4, x4, 4, 4, mv0, used=u0)
-            mf1.fill(y4, x4, 4, 4, mv1, used=u1)
-        counts[_b_mode_key(mb_type)] += 1
-        addr += 1
-    # a B frame's own motion record (only needed if it ever becomes a
-    # reference): per the §8.4.1.2.2 colocated rule, L0 motion wins
-    # when present, else L1
-    mv4 = np.where(mf0.used[..., None], mf0.mv, mf1.mv)
-    return ((recon.astype(np.uint8), rec_cb.astype(np.uint8),
-             rec_cr.astype(np.uint8)), qp, counts,
-            _inter_motion_info(mv4), poc_lsb)
-
-
-def encode_gop_b(frames, qp: int = 20, search_range: int = 4) -> bytes:
-    """Encode a low-delay GOP with B frames: I, P, then alternating
-    non-reference B (bi-predicted from the two most recent reference
-    reconstructions) and reference P. Main-profile SPS, 2-frame DPB."""
-    recons, _stats, stream = _encode_gop_b_full(frames, qp, search_range)
-    _ = recons
-    return stream
-
-
-def gop_b_reconstruction(frames, qp: int = 20, search_range: int = 4):
-    """Per-frame luma reconstructions + stats (see
-    gop_b_reconstruction_yuv for all three planes)."""
-    recons, stats, _stream = _encode_gop_b_full(frames, qp, search_range)
-    return [r[0] for r in recons], stats
-
-
-def gop_b_reconstruction_yuv(frames, qp: int = 20, search_range: int = 4):
-    """Full (y, cb, cr) decoded-loop reconstructions + stats."""
-    recons, stats, _stream = _encode_gop_b_full(frames, qp, search_range)
-    return recons, stats
-
-
-def _encode_gop_b_full(frames, qp, search_range):
-    if len(frames) < 3:
-        raise ValueError("a B GOP needs at least 3 frames (I, P, B)")
-    y0, cb0, cr0 = _to_yuv(np.asarray(frames[0]))
-    h, w_ = y0.shape
-    recon, payload = _encode_slice(y0, cb0, cr0, qp)
-    stream = (_nal(7, _build_sps_rbsp(w_, h, max_refs=2, profile=77))
-              + _nal(8, _build_pps_rbsp())
-              + _nal(5, payload))
-    recons, stats = [recon], []
-    # DPB mirror of the decoder's: ((y, cb, cr), motion record),
-    # newest first
-    refs = [(tuple(p.astype(np.int64) for p in recon),
-             _intra_motion_info(h // 16, w_ // 16))]
-    ref_fn = 0
-    for k, f in enumerate(frames[1:], start=1):
-        yuv = _to_yuv(np.asarray(f))
-        if yuv[0].shape != (h, w_):
-            raise ValueError("all GOP frames must share dimensions")
-        is_b = k >= 2 and (k % 2 == 0) and len(refs) >= 2
-        if is_b:
-            rec, rbsp, st = _encode_bslice(
-                refs[0][0], refs[1][0], yuv, qp, (ref_fn + 1) % 16,
-                search_range, col_info=refs[1][1],
-            )
-            stream += _nal(1, rbsp, ref_idc=0)
-            st = {"type": "B", **st}
-        else:
-            ref_fn += 1
-            rec, rbsp, st = _encode_pslice(
-                refs[0][0], yuv, qp, ref_fn % 16, search_range
-            )
-            stream += _nal(1, rbsp, ref_idc=2)
-            refs.insert(
-                0, (tuple(p.astype(np.int64) for p in rec),
-                    _inter_motion_info(st["mv_grid4"]))
-            )
-            del refs[2:]
-            st = {"type": "P", **st}
-        recons.append(rec)
-        stats.append(st)
-    return recons, stats, stream
-
-
-def encode_gop_b_weighted(frames, qp: int = 20,
-                          search_range: int = 4) -> bytes:
-    """Encode a low-delay B GOP under EXPLICIT WEIGHTED BI-PREDICTION
-    (weighted_bipred_idc = 1 PPS, weighted_pred_flag = 1 for the P
-    frames): every B slice carries a §7.3.3.2 pred_weight_table for
-    BOTH lists (per-plane least-squares fade weights vs each
-    reference) and every B prediction — B_Skip/Direct included — runs
-    the §8.4.2.3.2 weighted ops (uni: Clip1(((p*w + 2^(logWD-1)) >>
-    logWD) + o); bi: Clip1(((p0*w0 + p1*w1 + 2^logWD) >> (logWD+1)) +
-    ((o0+o1+1)>>1))). A global fade then collapses to B_Skip/Direct
-    rows instead of coding a residual on every B MB."""
-    _r, _s, stream = _encode_gop_bw_full(frames, qp, search_range)
-    return stream
-
-
-def gop_b_weighted_reconstruction_yuv(frames, qp: int = 20,
-                                      search_range: int = 4):
-    """Decoded-loop (y, cb, cr) reconstructions + stats (each B stat
-    carries its per-list weights as `bwp`) for encode_gop_b_weighted."""
-    recons, stats, _stream = _encode_gop_bw_full(frames, qp,
-                                                 search_range)
-    return recons, stats
-
-
-def _encode_gop_bw_full(frames, qp, search_range):
-    if len(frames) < 3:
-        raise ValueError("a B GOP needs at least 3 frames (I, P, B)")
-    y0, cb0, cr0 = _to_yuv(np.asarray(frames[0]))
-    h, w_ = y0.shape
-    recon, payload = _encode_slice(y0, cb0, cr0, qp)
-    stream = (_nal(7, _build_sps_rbsp(w_, h, max_refs=2, profile=77))
-              + _nal(8, _build_pps_rbsp(weighted_pred=True,
-                                        weighted_bipred=True))
-              + _nal(5, payload))
-    recons, stats = [recon], []
-    refs = [(tuple(p.astype(np.int64) for p in recon),
-             _intra_motion_info(h // 16, w_ // 16))]
-    ref_fn = 0
-    for k, f in enumerate(frames[1:], start=1):
-        yuv = _to_yuv(np.asarray(f))
-        if yuv[0].shape != (h, w_):
-            raise ValueError("all GOP frames must share dimensions")
-        is_b = k >= 2 and (k % 2 == 0) and len(refs) >= 2
-        if is_b:
-            e0 = _estimate_wp(yuv, refs[0][0])
-            e1 = _estimate_wp(yuv, refs[1][0])
-            bwp = {"logwd_y": e0["logwd_y"], "logwd_c": e0["logwd_c"]}
-            for comp in ("y", "cb", "cr"):
-                bwp[f"{comp}0"] = e0[comp]
-                bwp[f"{comp}1"] = e1[comp]
-            rec, rbsp, st = _encode_bslice(
-                refs[0][0], refs[1][0], yuv, qp, (ref_fn + 1) % 16,
-                search_range, col_info=refs[1][1], bwp=bwp,
-            )
-            stream += _nal(1, rbsp, ref_idc=0)
-            st = {"type": "B", "bwp": bwp, **st}
-        else:
-            ref_fn += 1
-            wp = _estimate_wp(yuv, refs[0][0])
-            rec, rbsp, st = _encode_pslice(
-                refs[0][0], yuv, qp, ref_fn % 16, search_range, wp=wp
-            )
-            stream += _nal(1, rbsp, ref_idc=2)
-            refs.insert(
-                0, (tuple(p.astype(np.int64) for p in rec),
-                    _inter_motion_info(st["mv_grid4"]))
-            )
-            del refs[2:]
-            st = {"type": "P", "wp": wp, **st}
-        recons.append(rec)
-        stats.append(st)
-    return recons, stats, stream
-
-
-def encode_gop_temporal(frames, qp: int = 20, search_range: int = 4,
-                        n_b: int = 1, implicit_weights: bool = False,
-                        ) -> bytes:
-    """Encode a display-REORDERED GOP with temporal-direct B frames —
-    the classic IBP structure: display order I B P B P..., decode
-    order I P B P B... where each B sits BETWEEN its two references
-    and RefPicList1[0] is the FUTURE P (so §8.4.1.2.3 temporal direct
-    has its natural geometry: the future P's motion crosses the B
-    toward L0[0] = refPicCol, and the B inherits it scaled by the POC
-    distances). poc_type-0 SPS (explicit pic_order_cnt_lsb, §8.2.1.1);
-    `frames` are display order; decode_stream returns decode order
-    plus per-frame POCs for reordering. `n_b` Bs sit between each
-    reference pair (n_b=2 gives the IbbP geometry where the Bs are
-    POC-asymmetric). `implicit_weights=True` emits a
-    weighted_bipred_idc=2 PPS: every bi prediction runs the
-    §8.4.2.3.1/§8.4.2.3.2 IMPLICIT weighted op with (w0, w1) derived
-    from the POC distances on BOTH sides — nothing transmitted; a
-    midpoint B derives the trivial (32, 32), an IbbP B derives e.g.
-    (43, 21)/(22, 42)."""
-    recons, _stats, stream = _encode_gop_t_full(
-        frames, qp, search_range, n_b=n_b, implicit=implicit_weights)
-    _ = recons
-    return stream
-
-
-def gop_temporal_reconstruction(frames, qp: int = 20,
-                                search_range: int = 4):
-    """Per-frame luma reconstructions in DECODE order + stats (see
-    gop_temporal_reconstruction_yuv for all planes); each stat dict
-    carries its frame's poc (2 * display index)."""
-    recons, stats, _stream = _encode_gop_t_full(frames, qp, search_range)
-    return [r[0] for r in recons], stats
-
-
-def gop_temporal_reconstruction_yuv(frames, qp: int = 20,
-                                    search_range: int = 4,
-                                    n_b: int = 1,
-                                    implicit_weights: bool = False):
-    recons, stats, _stream = _encode_gop_t_full(
-        frames, qp, search_range, n_b=n_b, implicit=implicit_weights)
-    return recons, stats
-
-
-def _encode_gop_t_full(frames, qp, search_range, n_b=1,
-                       implicit=False):
-    if len(frames) < 3:
-        raise ValueError("a temporal-direct GOP needs >= 3 frames")
-    y0, cb0, cr0 = _to_yuv(np.asarray(frames[0]))
-    h, w_ = y0.shape
-    recon, payload = _encode_slice(y0, cb0, cr0, qp, poc_lsb=0)
-    stream = (_nal(7, _build_sps_rbsp(w_, h, max_refs=2, profile=77,
-                                      poc_type=0))
-              + _nal(8, _build_pps_rbsp(weighted_bipred=2 if implicit
-                                        else 0))
-              + _nal(5, payload))
-    recons = [recon]
-    stats = [{"type": "I", "poc": 0}]
-    # DPB: ((y,cb,cr) int64, motion record, poc, ref_poc) newest-first;
-    # ref_poc = the POC this frame's own motion points to (refIdxCol
-    # is always 0 in this envelope, so it is single-valued)
-    refs = [(tuple(p.astype(np.int64) for p in recon),
-             _intra_motion_info(h // 16, w_ // 16), 0, None)]
-    ref_fn = 0
-    disp = 1
-    while disp < len(frames):
-        # up to n_b Bs, then the next reference in decode order (the
-        # frame after the Bs when one fits, else the trailing frame)
-        nb = min(n_b, len(frames) - 1 - disp)
-        p_disp = disp + nb
-        yuv_p = _to_yuv(np.asarray(frames[p_disp]))
-        if yuv_p[0].shape != (h, w_):
-            raise ValueError("all GOP frames must share dimensions")
-        ref_fn += 1
-        rec_p, rbsp, st = _encode_pslice(
-            refs[0][0], yuv_p, qp, ref_fn % 16, search_range,
-            poc_lsb=2 * p_disp,
-        )
-        stream += _nal(1, rbsp, ref_idc=2)
-        recons.append(rec_p)
-        stats.append({"type": "P", "poc": 2 * p_disp, **st})
-        refs.insert(0, (tuple(p.astype(np.int64) for p in rec_p),
-                        _inter_motion_info(st["mv_grid4"]),
-                        2 * p_disp, refs[0][2]))
-        del refs[2:]
-        for bk in range(nb):
-            yuv_b = _to_yuv(np.asarray(frames[disp + bk]))
-            if yuv_b[0].shape != (h, w_):
-                raise ValueError("all GOP frames must share dimensions")
-            # L0[0] = past ref (smaller POC), L1[0] = future ref (the P
-            # just coded) — the conformant POC-ordered default lists
-            past, future = refs[1], refs[0]
-            poc_b = 2 * (disp + bk)
-            # refPicCol (the colocated P's own reference) must be
-            # L0[0] for the single-entry-list derivation to be exact
-            if future[3] != past[2]:
-                raise ValueError("colocated reference is not L0[0]")
-            dsf = _dist_scale_factor(poc_b, past[2], future[2])
-            bwp = None
-            iw = None
-            if implicit:
-                iw = _implicit_weights(poc_b, past[2], future[2])
-                bwp = {"implicit": iw}
-            rec_b, rbsp, st = _encode_bslice(
-                past[0], future[0], yuv_b, qp, (ref_fn + 1) % 16,
-                search_range, col_info=future[1], poc_lsb=poc_b,
-                direct_mode="temporal", dsf=dsf, bwp=bwp,
-            )
-            stream += _nal(1, rbsp, ref_idc=0)
-            recons.append(rec_b)
-            stats.append({"type": "B", "poc": poc_b, "dsf": dsf,
-                          "iw": iw, **st})
-        disp += nb + 1
-    return recons, stats, stream
+             rec_cr.astype(np.uint8)), qp, n_i16, n_pcm)

@@ -9,18 +9,13 @@ interpretation (fps from dwRate/dwScale, dims from BITMAPINFOHEADER),
 frame chunk iteration ('00db' DIBs: bottom-up rows, BGR, 4-byte row
 stride), exact frame reconstruction, and — via the pure-Python
 baseline-JPEG codec in jpeg.py — REAL MJPG (Motion-JPEG) decode, the
-most common compressed AVI fourcc from capture tools. H.264 is also
-real now for Annex-B elementary streams within h264.py's documented
-envelope: IDR I-frames (CAVLC + Intra_4x4 + integer transform) AND
-motion-compensated P frames (P_Skip + 16x16/16x8/8x16/8x8 partitions,
-quarter-pel luma interpolation, 4x4-granular MV prediction) AND
-low-delay B frames (B_Skip + spatial B_Direct + B_L0/B_L1/B_Bi 16x16
-+ single-list 16x8/8x16 partitions,
-two-ref DPB — h264.py::decode_stream). What stays a documented stub:
-CABAC, temporal direct, sub-8x8/B
-sub-partitions, and vp9 entirely, which need an ffmpeg-class decoder
-absent from this container — `blobs.py::sample_blob_frames(fake=False)` routes AVI
-here and still raises for those. Their header-level METADATA
+most common compressed AVI fourcc from capture tools. For H.264 only
+IDR I-frames of Annex-B elementary streams decode
+(h264.py::decode_iframe — CAVLC, intra prediction, integer
+transform); P/B slices, CABAC, and vp9 entirely stay documented
+stubs, which need an ffmpeg-class decoder this library does not
+bundle — `blobs.py::sample_blob_frames(fake=False)` routes AVI here and
+still raises for those. Their header-level METADATA
 (resolution/profile via H.264 SPS parse, Exp-Golomb) is fully real in
 mediameta.py — the triage layer a 100 TB crawl actually runs first.
 

@@ -26,6 +26,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Row
 
 
+def _quote(name: str) -> str:
+    """SQL-quoted identifier: the reference's own column names hold
+    spaces (`Type of Travel`, Consumer.scala:22-46)."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 def upsert_partition(
     rows: Iterator[Row],
     connect: Callable,
@@ -37,10 +43,13 @@ def upsert_partition(
     """Upsert one partition's rows over a fresh DB-API connection."""
     cols = key_cols + val_cols
     placeholders = ", ".join(["?"] * len(cols))
-    updates = ", ".join(f"{c} = excluded.{c}" for c in val_cols)
+    updates = ", ".join(
+        f"{_quote(c)} = excluded.{_quote(c)}" for c in val_cols)
     sql = (
-        f"INSERT INTO {table} ({', '.join(cols)}) VALUES ({placeholders}) "
-        f"ON CONFLICT ({', '.join(key_cols)}) DO UPDATE SET {updates}"
+        f"INSERT INTO {_quote(table)} ({', '.join(map(_quote, cols))}) "
+        f"VALUES ({placeholders}) "
+        f"ON CONFLICT ({', '.join(map(_quote, key_cols))}) "
+        f"DO UPDATE SET {updates}"
     )
     con = connect()
     try:
@@ -83,8 +92,9 @@ class UpsertSink:
         batch_df.foreachPartition(_run)
 
     def create_table_sql(self, schema: dict[str, str]) -> str:
-        cols = ", ".join(f"{c} {t}" for c, t in schema.items())
+        cols = ", ".join(f"{_quote(c)} {t}" for c, t in schema.items())
+        keys = ", ".join(map(_quote, self.key_cols))
         return (
-            f"CREATE TABLE IF NOT EXISTS {self.table} "
-            f"({cols}, PRIMARY KEY ({', '.join(self.key_cols)}))"
+            f"CREATE TABLE IF NOT EXISTS {_quote(self.table)} "
+            f"({cols}, PRIMARY KEY ({keys}))"
         )

@@ -9,8 +9,9 @@ off-by-one at the first boundary — SURVEY §3 entry point 2). Here:
    over an explicit order column (operators/relational.py::split_segments),
 2. ONE partitioned write emits every segment directory
    (sinks/files.py::write_csv_segments),
-3. optional pacing moves the finished segment dirs into the watched
-   directory with a sleep — pacing is an I/O concern, not N Spark jobs.
+3. optional pacing renames each finished segment's files into the
+   watched directory with a sleep — pacing is an I/O concern, not N
+   Spark jobs.
 
 Segments form an exact partition of the input (property-tested), unlike
 the reference's duplicated/skipped boundary row.
@@ -19,7 +20,6 @@ the reference's duplicated/skipped boundary row.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame
@@ -45,9 +45,12 @@ def produce_segments(
 def pace_segments(
     staged_dir: str, watch_dir: str, sleep_sec: float = 1.0
 ) -> int:
-    """Move staged segment directories into the consumer-watched directory
-    one per `sleep_sec` (the reference's Thread.sleep(1000) pacing,
-    Producer.scala:46) — now decoupled from query execution."""
+    """Move staged segments' CSV files into the consumer-watched directory,
+    one segment per `sleep_sec` (the reference's Thread.sleep(1000)
+    pacing, Producer.scala:46) — now decoupled from query execution.
+    Each file lands by one atomic rename, so a file-stream listing never
+    sees a partial CSV; `staged_dir` and `watch_dir` must therefore be on
+    the same filesystem."""
     os.makedirs(watch_dir, exist_ok=True)
     segs = sorted(
         (d for d in os.listdir(staged_dir) if d.startswith("segment=")),
@@ -58,7 +61,7 @@ def pace_segments(
             time.sleep(sleep_sec)
         for f in os.listdir(os.path.join(staged_dir, d)):
             if f.endswith(".csv"):
-                shutil.copy(
+                os.replace(
                     os.path.join(staged_dir, d, f),
                     os.path.join(watch_dir, f"{d.replace('=', '_')}_{f}"),
                 )

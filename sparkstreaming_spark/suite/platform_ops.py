@@ -1042,8 +1042,8 @@ MEDIA_META_IDS = 180
 
 def q_media_meta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transform-coded-media TRIAGE, oracled: full decode of mp3/opus
-    is a documented stub (multimodal/audio.py; h264 I/P decode is now
-    real in h264.py within its envelope), but a
+    is a documented stub (multimodal/audio.py; h264 decode is real in
+    h264.py for IDR I-frames only), but a
     100 TB crawl is triaged on header metadata — duration, bitrate,
     sample rate, resolution — which IS fully parseable. Per doc
     (doc_id < 180) this synthesizes a conformant stream of the kind
@@ -1230,7 +1230,7 @@ def q_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # flat 128 luma: the ONLY provably quant-exact flat
                     # value (DC prediction starts at 128, so residuals
                     # are zero everywhere) -> px_sum is an exact formula;
-                    # pixel-level CAVLC stress lives in doc_h264_iframe_probe
+                    # pixel-level CAVLC stress lives in tests/test_h264.py
                     fh, fw = 16 * (1 + did % 2), 16 * (1 + did % 3)
                     blob = encode_iframe(
                         np.full((fh, fw), 128, np.uint8), qp=20
@@ -1493,1170 +1493,6 @@ QUERIES["doc_gif_anim_probe"] = QuerySpec(
     q_gif_anim_probe,
     ORACLE_GIF_ANIM,
     "animated GIF disposal-3 + transparency composition vs cell-formula oracle",
-)
-
-
-H264_IDS = 24
-
-
-def q_h264_iframe_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-only H.264 verification, oracled as a tolerance CONTRACT
-    (the same playbook as doc_mjpeg_frame_probe): per doc (doc_id < 24)
-    synthesize a saturating gradient luma image with formula-derived
-    dimensions, push it through the REAL clean-room baseline codec
-    (multimodal/h264.py — CAVLC coeff_token/level/total_zeros/
-    run_before, 4x4 integer transform + MF/V quantization, Intra_4x4 DC
-    prediction, conformant SPS/PPS/IDR Annex-B stream) at a doc-derived
-    QP, decode it back, and emit the exact metadata (width, height,
-    n_mbs, qp — each a generator formula the SQL restates) plus two
-    tolerance booleans on the decoded pixels (mean within 1.0, max abs
-    error within 8 — measured worst case 0.76 / 5 across the id range).
-    A VLC-table slip, transform/quant bug, or prediction off-by-one
-    blows the tolerance or the bit-exact roundtrip and flips the hash.
-
-    Spark shape: one Arrow mapInPandas pass, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import decode_iframe, encode_iframe
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_IDS
-    ).select("doc_id")
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 3)
-                h = 16 * (2 + did % 2)
-                qp = 12 + did % 16
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img = np.minimum(did + 3 * i + 2 * j, 255).astype(np.uint8)
-                out = decode_iframe(encode_iframe(img, qp=qp))
-                got = out["luma"].astype(np.float64)
-                exp = img.astype(np.float64)
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "n_mbs": out["n_mbs"],
-                    "qp": out["qp"],
-                    "px_mean_expected": round(float(exp.mean()), 6),
-                    "mean_ok": bool(abs(got.mean() - exp.mean()) <= 1.0),
-                    "max_err_ok": bool(np.abs(got - exp).max() <= 8.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, n_mbs int, qp int,"
-        " px_mean_expected double, mean_ok boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_PROBE = f"""
-WITH d AS (
-  SELECT doc_id, 16 * (2 + doc_id % 3) AS w, 16 * (2 + doc_id % 2) AS h,
-         12 + doc_id % 16 AS qp
-  FROM documents WHERE doc_id < {H264_IDS}
-),
-px AS (
-  SELECT d.doc_id, d.w, d.h, d.qp,
-         least(d.doc_id + 3 * i.i + 2 * j.j, 255) AS v
-  FROM d
-  JOIN generate_series(0, 47) AS i(i) ON i.i < d.h
-  JOIN generate_series(0, 63) AS j(j) ON j.j < d.w
-)
-SELECT doc_id,
-       CAST(max(w) AS INT) AS width,
-       CAST(max(h) AS INT) AS height,
-       CAST(max(w) / 16 * max(h) / 16 AS INT) AS n_mbs,
-       CAST(max(qp) AS INT) AS qp,
-       round(avg(v), 6) AS px_mean_expected,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM px GROUP BY doc_id
-"""
-
-
-QUERIES["doc_h264_iframe_probe"] = QuerySpec(
-    q_h264_iframe_probe,
-    ORACLE_H264_PROBE,
-    "intra-only H.264 CAVLC codec vs gradient formulas + tolerance contract",
-)
-
-
-H264_GOP_IDS = 16
-
-
-def q_h264_gop_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Motion-compensated H.264 GOP verification (multimodal/h264.py
-    inter section — P_Skip, P_L0_16x16, P_L0_L0_16x8, P_L0_L0_8x16,
-    quarter-pel interpolation, the 4x4-granular §8.4.1.3 MV prediction
-    with the directional partition rules, mb_skip_run, Inter CBP
-    mapping): per doc (doc_id < 16) synthesize a gradient frame plus
-    2-4 P frames of SPLIT motion (rows 8..h-16 pan, the top 8-pixel
-    band and the full LAST MB row stay static — the mid-MB split
-    forces 16x8 partitions while the static MB row forces skips) with
-    formula-derived dims/QP/length, encode a full GOP, decode it back,
-    and emit the exact metadata plus the bit-exact round-trip boolean
-    (decoded frames == the encoder's own reconstruction loop, every
-    frame), `parts_used`/`skip_used` (partitioned and skipped MBs must
-    actually occur — measured 2-16 partitioned and 2-23 skipped MBs
-    per id) and two tolerance booleans on the LAST decoded frame vs
-    its source (mean<=1.5, max<=8 — measured worst case 1.29 / 7
-    across the id range, deterministic content). Any
-    motion-search, interpolation, MV-prediction, partition,
-    skip-reconstruction, or CBP-table slip breaks bit-exactness or the
-    contract booleans and flips the hash.
-
-    Spark shape: one Arrow mapInPandas pass, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        decode_stream,
-        encode_gop,
-        gop_reconstruction,
-    )
-
-    # the sf0.1 table is a single parquet row group -> one input split;
-    # without this guard all 16 GOP encodes (the expensive pure-Python
-    # step) run in ONE task (the documented single-row-group pathology)
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_GOP_IDS
-    ).select("doc_id").repartition(H264_GOP_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 3)
-                h = 16 * (2 + did % 2)
-                qp = 14 + did % 12
-                nf = 3 + did % 3
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img0 = np.minimum(did + 3 * i + 2 * j, 255).astype(np.uint8)
-                frames, cur = [img0], img0
-                for k in range(1, nf):
-                    f = cur.copy()
-                    f[8 : h - 16, k:] = cur[8 : h - 16, :-k]
-                    f[8 : h - 16, :k] = cur[8 : h - 16, :1]
-                    frames.append(f)
-                    cur = f
-                out = decode_stream(encode_gop(frames, qp=qp))
-                recons, stats = gop_reconstruction(frames, qp=qp)
-                bitexact = all(
-                    np.array_equal(a, b)
-                    for a, b in zip(out["frames"], recons)
-                )
-                n_parts = sum(
-                    s["n_16x8"] + s["n_8x16"] + s["n_8x8"] for s in stats
-                )
-                n_skips = sum(s["n_skip"] for s in stats)
-                err = np.abs(out["frames"][-1].astype(np.float64)
-                             - frames[-1].astype(np.float64))
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "n_mbs": out["n_mbs"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_p_frames": out["frame_types"].count("P"),
-                    "p_bitexact": bool(bitexact),
-                    "parts_used": bool(n_parts > 0),
-                    "skip_used": bool(n_skips > 0),
-                    "mean_ok": bool(err.mean() <= 1.5),
-                    "max_err_ok": bool(err.max() <= 8.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, n_mbs int, qp int,"
-        " n_frames int, n_p_frames int, p_bitexact boolean,"
-        " parts_used boolean, skip_used boolean,"
-        " mean_ok boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_GOP = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS height,
-       CAST((2 + doc_id % 3) * (2 + doc_id % 2) AS INT) AS n_mbs,
-       CAST(14 + doc_id % 12 AS INT) AS qp,
-       CAST(3 + doc_id % 3 AS INT) AS n_frames,
-       CAST(2 + doc_id % 3 AS INT) AS n_p_frames,
-       TRUE AS p_bitexact,
-       TRUE AS parts_used,
-       TRUE AS skip_used,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_GOP_IDS}
-"""
-
-
-QUERIES["doc_h264_gop_probe"] = QuerySpec(
-    q_h264_gop_probe,
-    ORACLE_H264_GOP,
-    "H.264 P-frame GOP codec: motion comp + quarter-pel, bit-exact contract",
-)
-
-
-H264_B_IDS = 12
-
-
-def q_h264_bframe_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B-slice H.264 GOP verification (multimodal/h264.py B section —
-    B_Skip + spatial B_Direct_16x16 (§8.4.1.2.2, colocated motion via
-    the DPB) + B_L0/B_L1/B_Bi 16x16 against the two most recent past
-    references, default bi-prediction, Main-profile SPS, non-reference
-    B NALs): per doc (doc_id < 12) synthesize an I-P-B... low-delay GOP
-    of panning gradient frames with formula-derived dims/QP/length,
-    encode, decode, and emit exact metadata + the per-type frame counts
-    + the bit-exact round-trip boolean + `modes_ok` (the decoder's
-    per-B-frame mb-mode histogram equals the encoder's — pins the
-    skip-run and direct-derivation bitstream paths) + `skip_direct_used`
-    (panning content must actually exercise B_Skip/B_Direct; measured
-    3-22 such MBs per id) + a tolerance boolean on the last frame. A
-    list-selection, bi-averaging, per-list MV-prediction, spatial-
-    direct, colZeroFlag, or DPB bug (a B frame leaking into the
-    reference list) breaks bit-exactness or the histograms and flips
-    the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        decode_stream,
-        encode_gop_b,
-        gop_b_reconstruction,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_B_IDS
-    ).select("doc_id").repartition(H264_B_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 16 + did % 10
-                nf = 4 + did % 2
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img0 = np.minimum(did + 2 * i + 3 * j, 255).astype(np.uint8)
-                frames = [np.roll(img0, k, axis=1) for k in range(nf)]
-                out = decode_stream(encode_gop_b(frames, qp=qp))
-                recons, stats = gop_b_reconstruction(frames, qp=qp)
-                bitexact = all(
-                    np.array_equal(a, b)
-                    for a, b in zip(out["frames"], recons)
-                )
-                mode_keys = ("n_skip", "n_direct", "n_l0", "n_l1", "n_bi",
-                             "n_l0_part", "n_l1_part", "n_mixed_part",
-                             "n_bi_part", "n_b8x8", "n_b8_split")
-                enc_modes = [
-                    {k: s[k] for k in mode_keys}
-                    for s in stats if s["type"] == "B"
-                ]
-                n_sd = sum(
-                    m["n_skip"] + m["n_direct"] for m in enc_modes
-                )
-                err = np.abs(out["frames"][-1].astype(np.float64)
-                             - frames[-1].astype(np.float64))
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_b_frames": out["frame_types"].count("B"),
-                    "n_p_frames": out["frame_types"].count("P"),
-                    "b_bitexact": bool(bitexact),
-                    "modes_ok": bool(
-                        enc_modes == out["b_mode_counts"]
-                    ),
-                    "skip_direct_used": bool(n_sd > 0),
-                    "max_err_ok": bool(err.max() <= 8.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " n_b_frames int, n_p_frames int, b_bitexact boolean,"
-        " modes_ok boolean, skip_direct_used boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_B = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(16 + doc_id % 10 AS INT) AS qp,
-       CAST(4 + doc_id % 2 AS INT) AS n_frames,
-       CAST((3 + doc_id % 2) // 2 AS INT) AS n_b_frames,
-       CAST((4 + doc_id % 2) - 1 - (3 + doc_id % 2) // 2 AS INT)
-         AS n_p_frames,
-       TRUE AS b_bitexact,
-       TRUE AS modes_ok,
-       TRUE AS skip_direct_used,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_B_IDS}
-"""
-
-
-QUERIES["doc_h264_bframe_probe"] = QuerySpec(
-    q_h264_bframe_probe,
-    ORACLE_H264_B,
-    "H.264 B-slice GOP codec: bi-prediction + two-ref DPB, bit-exact contract",
-)
-
-
-H264_CHROMA_IDS = 12
-
-
-def q_h264_chroma_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4:2:0 chroma residual verification for the H.264 codec
-    (multimodal/h264.py round-8 chroma layer — §8.3.4 DC chroma intra
-    prediction, §8.5.11 2x2 DC Hadamard scaling, Table 8-15 QPc, the
-    nC = -1 chroma-DC and 15-coefficient AC CAVLC paths, Table 9-4
-    chroma CBP, §8.4.2.2.2 eighth-pel chroma MC and §8.4.2.3
-    bi-averaged B-slice chroma): per doc (doc_id < 12) synthesize a
-    COLOR panning GOP (RGB gradients with per-channel structure so
-    cb/cr carry real signal) with formula-derived dims/QP/length,
-    encode it as I-P-B..., decode, and emit exact metadata plus
-    `yuv_bitexact` (decoded luma AND cb AND cr equal the encoder's own
-    reconstruction loop on every frame — any chroma quant/CAVLC/MC/
-    prediction slip breaks it), `chroma_signal` (the source chroma is
-    non-neutral by construction: plane std > 4 — guards against a
-    degenerate all-128 test), and two chroma tolerance booleans on the
-    last decoded frame vs its source (mean <= 3.0, max <= 24 —
-    measured worst case 1.26 / 12 across the id range, deterministic
-    content, min plane std 12.7; without the chroma residual path the
-    reconstruction would sit at the DC prediction and blow both
-    bounds).
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        _to_yuv,
-        decode_stream,
-        encode_gop_b,
-        gop_b_reconstruction_yuv,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_CHROMA_IDS
-    ).select("doc_id").repartition(H264_CHROMA_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 12 + did % 14
-                nf = 4 + did % 2
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img0 = np.stack([
-                    np.minimum(did + 3 * i + 2 * j, 255),
-                    ((did * 7 + i + 4 * j) % 256),
-                    np.maximum(200 - 2 * i - j + did, 0),
-                ], axis=-1).astype(np.uint8)
-                frames = [np.roll(img0, k, axis=1) for k in range(nf)]
-                out = decode_stream(encode_gop_b(frames, qp=qp))
-                recons, _stats = gop_b_reconstruction_yuv(frames, qp=qp)
-                bitexact = all(
-                    np.array_equal(out["frames"][k], recons[k][0])
-                    and np.array_equal(out["frames_cb"][k], recons[k][1])
-                    and np.array_equal(out["frames_cr"][k], recons[k][2])
-                    for k in range(len(recons))
-                )
-                _, scb, scr = _to_yuv(frames[-1])
-                err = np.concatenate([
-                    np.abs(out["frames_cb"][-1].astype(np.float64)
-                           - scb.astype(np.float64)).ravel(),
-                    np.abs(out["frames_cr"][-1].astype(np.float64)
-                           - scr.astype(np.float64)).ravel(),
-                ])
-                signal = min(float(scb.std()), float(scr.std()))
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_b_frames": out["frame_types"].count("B"),
-                    "yuv_bitexact": bool(bitexact),
-                    "chroma_signal": bool(signal > 4.0),
-                    "chroma_mean_ok": bool(err.mean() <= 3.0),
-                    "chroma_max_ok": bool(err.max() <= 24.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " n_b_frames int, yuv_bitexact boolean, chroma_signal boolean,"
-        " chroma_mean_ok boolean, chroma_max_ok boolean",
-    )
-
-
-ORACLE_H264_CHROMA = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(12 + doc_id % 14 AS INT) AS qp,
-       CAST(4 + doc_id % 2 AS INT) AS n_frames,
-       CAST((3 + doc_id % 2) // 2 AS INT) AS n_b_frames,
-       TRUE AS yuv_bitexact,
-       TRUE AS chroma_signal,
-       TRUE AS chroma_mean_ok,
-       TRUE AS chroma_max_ok
-FROM documents WHERE doc_id < {H264_CHROMA_IDS}
-"""
-
-
-QUERIES["doc_h264_chroma_probe"] = QuerySpec(
-    q_h264_chroma_probe,
-    ORACLE_H264_CHROMA,
-    "H.264 4:2:0 chroma residual: Hadamard DC + AC CAVLC + 1/8-pel MC, "
-    "bit-exact contract",
-)
-
-
-H264_TDIRECT_IDS = 12
-
-
-def q_h264_tdirect_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal-direct / display-reordered GOP verification
-    (multimodal/h264.py round-8 temporal layer — poc_type-0 SPS with
-    explicit pic_order_cnt_lsb, §8.2.1.1 POC derivation, POC-ordered
-    B reference lists with a FUTURE L1[0], §8.4.1.2.3 per-quadrant
-    mvCol scaling by DistScaleFactor, direct_spatial_mv_pred_flag=0):
-    per doc (doc_id < 12) synthesize a classic IBP GOP (display order
-    I B P B P... with a flat-128 top MB band — exactly representable
-    at any QP, so B_Skip through the temporal derivation is
-    guaranteed — over a panning color gradient) with formula-derived
-    dims/QP/length, encode in decode order I P B..., decode, and emit
-    exact metadata + `poc_sum` (Σ POC = nf*(nf-1) pins the §8.2.1.1
-    derivation and the display reordering) + `yuv_bitexact`
-    (three-plane decoder == encoder loop, every frame) +
-    `tdirect_used` (the temporal direct/skip path must actually fire;
-    measured 2-14 MBs per id) + tolerance booleans on the last
-    DISPLAY frame vs its source (worst measured mean 0.56 / max 5;
-    bounds 1.5 / 12). A POC, list-order, DistScaleFactor, or
-    mv-scaling slip breaks bit-exactness, the poc_sum, or the usage
-    boolean and flips the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        _to_yuv,
-        decode_stream,
-        encode_gop_temporal,
-        gop_temporal_reconstruction_yuv,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_TDIRECT_IDS
-    ).select("doc_id").repartition(H264_TDIRECT_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 14 + did % 10
-                nf = 4 + did % 3
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img0 = np.stack([
-                    np.minimum(did + 3 * i + 2 * j, 255),
-                    ((did * 5 + 2 * i + 3 * j) % 256),
-                    np.maximum(190 - i - 2 * j + did, 0),
-                ], axis=-1).astype(np.uint8)
-                img0[:16] = 128
-                frames = [img0]
-                for _k in range(1, nf):
-                    f = frames[-1].copy()
-                    f[16:, 2:] = frames[-1][16:, :-2]
-                    f[16:, :2] = frames[-1][16:, :1]
-                    frames.append(f)
-                out = decode_stream(
-                    encode_gop_temporal(frames, qp=qp, search_range=6))
-                recons, _stats = gop_temporal_reconstruction_yuv(
-                    frames, qp=qp, search_range=6)
-                bitexact = all(
-                    np.array_equal(out["frames"][k], recons[k][0])
-                    and np.array_equal(out["frames_cb"][k], recons[k][1])
-                    and np.array_equal(out["frames_cr"][k], recons[k][2])
-                    for k in range(len(recons))
-                )
-                td = sum(c["n_skip"] + c["n_direct"]
-                         for c in out["b_mode_counts"])
-                li = out["poc"].index(max(out["poc"]))
-                ys, cbs, crs = _to_yuv(frames[out["poc"][li] // 2])
-                err = np.abs(out["frames"][li].astype(np.float64)
-                             - ys.astype(np.float64))
-                errc = np.concatenate([
-                    np.abs(out["frames_cb"][li].astype(np.float64)
-                           - cbs.astype(np.float64)).ravel(),
-                    np.abs(out["frames_cr"][li].astype(np.float64)
-                           - crs.astype(np.float64)).ravel(),
-                ])
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_b_frames": out["frame_types"].count("B"),
-                    "poc_sum": int(sum(out["poc"])),
-                    "yuv_bitexact": bool(bitexact),
-                    "tdirect_used": bool(td > 0),
-                    "mean_ok": bool(max(err.mean(), errc.mean()) <= 1.5),
-                    "max_err_ok": bool(max(err.max(), errc.max()) <= 12.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " n_b_frames int, poc_sum bigint, yuv_bitexact boolean,"
-        " tdirect_used boolean, mean_ok boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_TDIRECT = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(14 + doc_id % 10 AS INT) AS qp,
-       CAST(4 + doc_id % 3 AS INT) AS n_frames,
-       CAST((3 + doc_id % 3) // 2 AS INT) AS n_b_frames,
-       CAST((4 + doc_id % 3) * (3 + doc_id % 3) AS BIGINT) AS poc_sum,
-       TRUE AS yuv_bitexact,
-       TRUE AS tdirect_used,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_TDIRECT_IDS}
-"""
-
-
-QUERIES["doc_h264_tdirect_probe"] = QuerySpec(
-    q_h264_tdirect_probe,
-    ORACLE_H264_TDIRECT,
-    "H.264 temporal direct: poc_type-0 reordered GOP, scaled colocated "
-    "motion, bit-exact contract",
-)
-
-
-H264_WPRED_IDS = 12
-
-
-def q_h264_wpred_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit weighted prediction verification (multimodal/h264.py
-    round-8 WP layer — weighted_pred_flag=1 PPS, §7.3.3.2
-    pred_weight_table with per-plane (weight, offset), §8.4.2.3.2
-    sample op Clip1(((p*w + 2^(logWD-1)) >> logWD) + o) applied to
-    EVERY P inter prediction including P_Skip): per doc (doc_id < 12)
-    synthesize a global-fade color GOP (per-frame brightness scale —
-    the content WP exists for) with formula-derived dims/QP/length/
-    fade-step, encode with least-squares per-plane weights, decode,
-    and emit exact metadata + `yuv_bitexact` (three-plane decoder ==
-    encoder loop) + `wp_engaged` (the estimated luma weight differs
-    from the 2^logWD identity on every P — the fade model really
-    fired) + `skip_used` (weighted P_Skip must occur: without WP a
-    fade can never skip; measured 5-48 skips per id) + fade tolerance
-    booleans on the last frame (worst measured mean 2.19 / max 19;
-    bounds 4.0 / 32). A weight-table syntax, sample-op rounding, or
-    skip-weighting slip breaks bit-exactness or the booleans and
-    flips the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        _to_yuv,
-        decode_stream,
-        encode_gop_weighted,
-        gop_weighted_reconstruction_yuv,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_WPRED_IDS
-    ).select("doc_id").repartition(H264_WPRED_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 22 + did % 8
-                nf = 3 + did % 3
-                step = 0.08 + 0.01 * (did % 5)
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                base = np.stack([
-                    (did + 2 * j + i) % 200 + 30,
-                    (100 + (3 * i + 2 * j + did) % 90),
-                    (did * 3 + j + 2 * i) % 180 + 40,
-                ], axis=-1).astype(np.uint8)
-                frames = [
-                    np.clip(base.astype(np.float64) * (1.0 - step * t),
-                            0, 255).astype(np.uint8)
-                    for t in range(nf)
-                ]
-                out = decode_stream(encode_gop_weighted(frames, qp=qp))
-                recons, stats = gop_weighted_reconstruction_yuv(
-                    frames, qp=qp)
-                bitexact = all(
-                    np.array_equal(out["frames"][k], recons[k][0])
-                    and np.array_equal(out["frames_cb"][k], recons[k][1])
-                    and np.array_equal(out["frames_cr"][k], recons[k][2])
-                    for k in range(len(recons))
-                )
-                nskip = sum(s["n_skip"] for s in stats)
-                engaged = all(s["wp"]["y"][0] != 32 for s in stats)
-                ys, cbs, crs = _to_yuv(frames[-1])
-                err = np.abs(out["frames"][-1].astype(np.float64)
-                             - ys.astype(np.float64))
-                errc = np.concatenate([
-                    np.abs(out["frames_cb"][-1].astype(np.float64)
-                           - cbs.astype(np.float64)).ravel(),
-                    np.abs(out["frames_cr"][-1].astype(np.float64)
-                           - crs.astype(np.float64)).ravel(),
-                ])
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "yuv_bitexact": bool(bitexact),
-                    "wp_engaged": bool(engaged),
-                    "skip_used": bool(nskip > 0),
-                    "mean_ok": bool(max(err.mean(), errc.mean()) <= 4.0),
-                    "max_err_ok": bool(max(err.max(), errc.max()) <= 32.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " yuv_bitexact boolean, wp_engaged boolean, skip_used boolean,"
-        " mean_ok boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_WPRED = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(22 + doc_id % 8 AS INT) AS qp,
-       CAST(3 + doc_id % 3 AS INT) AS n_frames,
-       TRUE AS yuv_bitexact,
-       TRUE AS wp_engaged,
-       TRUE AS skip_used,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_WPRED_IDS}
-"""
-
-
-QUERIES["doc_h264_wpred_probe"] = QuerySpec(
-    q_h264_wpred_probe,
-    ORACLE_H264_WPRED,
-    "H.264 explicit weighted prediction: fade-collapse contract, "
-    "bit-exact round-trip",
-)
-
-
-H264_MULTIREF_IDS = 12
-
-
-def q_h264_multiref_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-reference P coding verification (multimodal/h264.py
-    round-8 multi-ref layer — max_num_ref_frames=2 SPS, active_l0=2
-    PPS, per-partition te(v) ref_idx_l0 per §7.3.5.1/.2 with the
-    §8.4.1.3.1 same-refIdx MV prediction and the refIdx-0-gated
-    P_Skip zero conditions; the first P slice overrides active down
-    to 1): per doc (doc_id < 12) synthesize a BLINKING GOP — a random
-    texture whose center region alternates with a second texture, so
-    odd/even frames match frame t-2 exactly in that region and
-    partitions must choose L0[1] — with formula-derived dims/QP/
-    length, encode, decode, and emit exact metadata + `mr_bitexact`
-    (three-plane decoder == encoder loop) + `ref1_used` (L0[1] must
-    actually win; measured 6-16 partitions per id) + tolerance
-    booleans on the last frame (worst measured mean 2.45 / max 15;
-    bounds 4.0 / 32). A te(v) inversion, ref-list ordering, same-ref
-    MVP, or DPB bug breaks bit-exactness or the booleans and flips
-    the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        _to_yuv,
-        decode_stream,
-        encode_gop_multiref,
-        gop_multiref_reconstruction_yuv,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_MULTIREF_IDS
-    ).select("doc_id").repartition(H264_MULTIREF_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 16 + did % 8
-                nf = 5 + did % 2
-                rng = np.random.default_rng(1000 + did)
-                tex_a = rng.integers(0, 256, (h, w_, 3)).astype(np.uint8)
-                tex_b = rng.integers(0, 256, (h, w_, 3)).astype(np.uint8)
-                r0, c0 = h // 4, w_ // 4
-                frames = []
-                for t in range(nf):
-                    f = tex_a.copy()
-                    if t % 2 == 1:
-                        f[r0 : r0 + 16, c0 : c0 + 16] = \
-                            tex_b[r0 : r0 + 16, c0 : c0 + 16]
-                    frames.append(f)
-                out = decode_stream(encode_gop_multiref(frames, qp=qp))
-                recons, stats = gop_multiref_reconstruction_yuv(
-                    frames, qp=qp)
-                bitexact = all(
-                    np.array_equal(out["frames"][k], recons[k][0])
-                    and np.array_equal(out["frames_cb"][k], recons[k][1])
-                    and np.array_equal(out["frames_cr"][k], recons[k][2])
-                    for k in range(len(recons))
-                )
-                n_ref1 = sum(s["n_ref1"] for s in stats)
-                ys, cbs, crs = _to_yuv(frames[-1])
-                err = np.abs(out["frames"][-1].astype(np.float64)
-                             - ys.astype(np.float64))
-                errc = np.concatenate([
-                    np.abs(out["frames_cb"][-1].astype(np.float64)
-                           - cbs.astype(np.float64)).ravel(),
-                    np.abs(out["frames_cr"][-1].astype(np.float64)
-                           - crs.astype(np.float64)).ravel(),
-                ])
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_p_frames": out["frame_types"].count("P"),
-                    "mr_bitexact": bool(bitexact),
-                    "ref1_used": bool(n_ref1 > 0),
-                    "mean_ok": bool(max(err.mean(), errc.mean()) <= 4.0),
-                    "max_err_ok": bool(max(err.max(), errc.max()) <= 32.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " n_p_frames int, mr_bitexact boolean, ref1_used boolean,"
-        " mean_ok boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_MULTIREF = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(16 + doc_id % 8 AS INT) AS qp,
-       CAST(5 + doc_id % 2 AS INT) AS n_frames,
-       CAST(4 + doc_id % 2 AS INT) AS n_p_frames,
-       TRUE AS mr_bitexact,
-       TRUE AS ref1_used,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_MULTIREF_IDS}
-"""
-
-
-QUERIES["doc_h264_multiref_probe"] = QuerySpec(
-    q_h264_multiref_probe,
-    ORACLE_H264_MULTIREF,
-    "H.264 multi-reference P coding: te(v) ref_idx + same-refIdx MVP, "
-    "bit-exact round-trip",
-)
-
-
-H264_I16_IDS = 16
-
-
-def q_h264_i16_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra_16x16 verification (multimodal/h264.py round-8 I_16x16
-    layer — §8.3.3 V/H/DC/Plane whole-MB prediction, the §8.5.10 luma
-    DC Hadamard path at 4x AC precision, Table 7-11 mb_type jointly
-    coding the prediction mode and both CBPs, Intra16x16DCLevel /
-    15-coefficient AC CAVLC): per doc (doc_id < 16) synthesize a
-    non-saturating slope-2 luma ramp (the §8.3.3.4 plane predictor's
-    exact home turf) with formula-derived dims/QP, encode with the
-    I_16x16-vs-I_4x4 deadband decision, decode, and emit exact
-    metadata + `i16_used` (smooth content must actually collapse to
-    I_16x16 — measured 4-12 MBs per id) + `bitexact` (decoder ==
-    encoder loop) + tolerance booleans (worst measured mean 0.57 /
-    max 4; bounds 2.0 / 8). A Table 7-11 derivation, plane-predictor,
-    DC-Hadamard-gain, or CAVLC-nC slip breaks the booleans and flips
-    the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        decode_iframe,
-        encode_iframe,
-        encoder_reconstruction,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_I16_IDS
-    ).select("doc_id").repartition(H264_I16_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (3 - did % 2)
-                qp = 10 + did % 14
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img = (20 + (did % 5) * 4 + 2 * i + 2 * j).astype(
-                    np.uint8)
-                out = decode_iframe(encode_iframe(img, qp=qp))
-                bitexact = np.array_equal(
-                    out["luma"], encoder_reconstruction(img, qp=qp))
-                err = np.abs(out["luma"].astype(np.float64)
-                             - img.astype(np.float64))
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_mbs": out["n_mbs"],
-                    "i16_used": bool(out["n_i16_mbs"] > 0),
-                    "bitexact": bool(bitexact),
-                    "mean_ok": bool(err.mean() <= 2.0),
-                    "max_err_ok": bool(err.max() <= 8.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_mbs int,"
-        " i16_used boolean, bitexact boolean, mean_ok boolean,"
-        " max_err_ok boolean",
-    )
-
-
-ORACLE_H264_I16 = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (3 - doc_id % 2) AS INT) AS height,
-       CAST(10 + doc_id % 14 AS INT) AS qp,
-       CAST((2 + doc_id % 2) * (3 - doc_id % 2) AS INT) AS n_mbs,
-       TRUE AS i16_used,
-       TRUE AS bitexact,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_I16_IDS}
-"""
-
-
-QUERIES["doc_h264_i16_probe"] = QuerySpec(
-    q_h264_i16_probe,
-    ORACLE_H264_I16,
-    "H.264 Intra_16x16: plane prediction + luma DC Hadamard, "
-    "bit-exact contract",
-)
-
-
-H264_BWPRED_IDS = 12
-
-
-def q_h264_bwpred_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit weighted BI-prediction verification (multimodal/
-    h264.py round-8 layer — weighted_bipred_idc=1 PPS, §7.3.3.2
-    pred_weight_table for BOTH lists, §8.4.2.3.2 weighted uni/bi
-    sample ops applied to every B prediction incl. B_Skip/B_Direct):
-    per doc (doc_id < 12) synthesize a global-fade color B GOP with
-    formula-derived dims/QP/length/fade-step, encode with per-list
-    least-squares fade weights, decode, and emit exact metadata +
-    `yuv_bitexact` (three-plane decoder == encoder loop) +
-    `wp_engaged` (the L0 luma weight differs from the 2^logWD identity
-    on every B) + `sd_dominant` (>= 3/4 of B macroblocks collapse to
-    B_Skip/B_Direct — without WP a fade can never skip; measured
-    full-or-near-full collapse per id) + fade tolerance booleans on
-    the last frame (worst measured mean 1.63 / max 13; bounds 4.0 /
-    32). A weight-table-order, bi-op rounding, or skip-weighting slip
-    breaks bit-exactness or the booleans and flips the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        _to_yuv,
-        decode_stream,
-        encode_gop_b_weighted,
-        gop_b_weighted_reconstruction_yuv,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_BWPRED_IDS
-    ).select("doc_id").repartition(H264_BWPRED_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 20 + did % 8
-                nf = 5 + did % 2
-                step = 0.05 + 0.01 * (did % 4)
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                base = np.stack([
-                    (did + 2 * j + i) % 200 + 30,
-                    (100 + (3 * i + 2 * j + did) % 90),
-                    (did * 3 + j + 2 * i) % 180 + 40,
-                ], axis=-1).astype(np.uint8)
-                frames = [
-                    np.clip(base.astype(np.float64) * (1.0 - step * t),
-                            0, 255).astype(np.uint8)
-                    for t in range(nf)
-                ]
-                out = decode_stream(encode_gop_b_weighted(frames, qp=qp))
-                recons, stats = gop_b_weighted_reconstruction_yuv(
-                    frames, qp=qp)
-                bitexact = all(
-                    np.array_equal(out["frames"][k], recons[k][0])
-                    and np.array_equal(out["frames_cb"][k], recons[k][1])
-                    and np.array_equal(out["frames_cr"][k], recons[k][2])
-                    for k in range(len(recons))
-                )
-                bs = [s for s in stats if s["type"] == "B"]
-                nsd = sum(s["n_skip"] + s["n_direct"] for s in bs)
-                nmb = (w_ // 16) * (h // 16)
-                engaged = all(s["bwp"]["y0"][0] != 32 for s in bs)
-                ys, cbs, crs = _to_yuv(frames[-1])
-                err = np.abs(out["frames"][-1].astype(np.float64)
-                             - ys.astype(np.float64))
-                errc = np.concatenate([
-                    np.abs(out["frames_cb"][-1].astype(np.float64)
-                           - cbs.astype(np.float64)).ravel(),
-                    np.abs(out["frames_cr"][-1].astype(np.float64)
-                           - crs.astype(np.float64)).ravel(),
-                ])
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_b_frames": out["frame_types"].count("B"),
-                    "yuv_bitexact": bool(bitexact),
-                    "wp_engaged": bool(engaged),
-                    "sd_dominant": bool(
-                        4 * nsd >= 3 * nmb * len(bs)),
-                    "mean_ok": bool(max(err.mean(), errc.mean()) <= 4.0),
-                    "max_err_ok": bool(max(err.max(), errc.max()) <= 32.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " n_b_frames int, yuv_bitexact boolean, wp_engaged boolean,"
-        " sd_dominant boolean, mean_ok boolean, max_err_ok boolean",
-    )
-
-
-ORACLE_H264_BWPRED = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(20 + doc_id % 8 AS INT) AS qp,
-       CAST(5 + doc_id % 2 AS INT) AS n_frames,
-       CAST((4 + doc_id % 2) // 2 AS INT) AS n_b_frames,
-       TRUE AS yuv_bitexact,
-       TRUE AS wp_engaged,
-       TRUE AS sd_dominant,
-       TRUE AS mean_ok,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_BWPRED_IDS}
-"""
-
-
-QUERIES["doc_h264_bwpred_probe"] = QuerySpec(
-    q_h264_bwpred_probe,
-    ORACLE_H264_BWPRED,
-    "H.264 explicit weighted BI-prediction: per-list weights, "
-    "fade collapse in B slices, bit-exact round-trip",
-)
-
-
-H264_IBB_IDS = 12
-
-
-def q_h264_ibb_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IbbP + IMPLICIT weighted bi-prediction verification
-    (multimodal/h264.py round-8 layer — two Bs between each reference
-    pair, each with its own 1/3- and 2/3-gap DistScaleFactor for
-    temporal direct, under a weighted_bipred_idc=2 PPS whose §8.4.2.3.1
-    weights (w1 = DistScaleFactor >> 2, w0 = 64 - w1, logWD 5) are
-    DERIVED from the POC distances on both sides — nothing
-    transmitted): per doc (doc_id < 12) synthesize a panning-gradient
-    7-frame display-order GOP with formula-derived dims/QP, encode,
-    decode, and emit exact metadata + `poc_sum` (pins the §8.2.1.1 POC
-    derivation and the IbbP decode-order interleave) + `iw_nontrivial`
-    (BOTH non-trivial implicit pairs (43,21) and (22,42) must occur —
-    a midpoint-only geometry would derive the trivial (32,32)) +
-    `yuv_bitexact` + `skip_direct_used` + a tolerance boolean on the
-    last display frame (worst measured mean 1.23 / max 7; bounds 4.0 /
-    16). A POC, scale-factor, or implicit-derivation slip on either
-    side breaks bit-exactness or the booleans and flips the hash.
-
-    Spark shape: one Arrow mapInPandas pass, repartitioned across the
-    blob ids (single-row-group guard), no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..multimodal.h264 import (
-        _to_yuv,
-        decode_stream,
-        encode_gop_temporal,
-        gop_temporal_reconstruction_yuv,
-    )
-
-    d = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < H264_IBB_IDS
-    ).select("doc_id").repartition(H264_IBB_IDS)
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w_ = 16 * (2 + did % 2)
-                h = 16 * (2 + did % 3)
-                qp = 16 + did % 10
-                i = np.arange(h).reshape(-1, 1)
-                j = np.arange(w_).reshape(1, -1)
-                img0 = np.minimum(did + 2 * i + 3 * j, 255).astype(
-                    np.uint8)
-                frames = [np.roll(img0, k, axis=1) for k in range(7)]
-                out = decode_stream(encode_gop_temporal(
-                    frames, qp=qp, n_b=2, implicit_weights=True))
-                recons, stats = gop_temporal_reconstruction_yuv(
-                    frames, qp=qp, n_b=2, implicit_weights=True)
-                bitexact = all(
-                    np.array_equal(out["frames"][k], recons[k][0])
-                    and np.array_equal(out["frames_cb"][k], recons[k][1])
-                    and np.array_equal(out["frames_cr"][k], recons[k][2])
-                    for k in range(len(recons))
-                )
-                iws = set(s["iw"] for s in stats if s["type"] == "B")
-                nsd = sum(s["n_skip"] + s["n_direct"] for s in stats
-                          if s["type"] == "B")
-                li = out["poc"].index(max(out["poc"]))
-                ys, _cbs, _crs = _to_yuv(frames[out["poc"][li] // 2])
-                err = np.abs(out["frames"][li].astype(np.float64)
-                             - ys.astype(np.float64))
-                rows.append({
-                    "doc_id": did,
-                    "width": out["width"],
-                    "height": out["height"],
-                    "qp": out["qp"],
-                    "n_frames": len(out["frames"]),
-                    "n_b_frames": out["frame_types"].count("B"),
-                    "poc_sum": sum(out["poc"]),
-                    "yuv_bitexact": bool(bitexact),
-                    "iw_nontrivial": bool(
-                        (43, 21) in iws and (22, 42) in iws),
-                    "skip_direct_used": bool(nsd > 0),
-                    "max_err_ok": bool(err.max() <= 16.0),
-                })
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(
-        work,
-        "doc_id bigint, width int, height int, qp int, n_frames int,"
-        " n_b_frames int, poc_sum bigint, yuv_bitexact boolean,"
-        " iw_nontrivial boolean, skip_direct_used boolean,"
-        " max_err_ok boolean",
-    )
-
-
-ORACLE_H264_IBB = f"""
-SELECT doc_id,
-       CAST(16 * (2 + doc_id % 2) AS INT) AS width,
-       CAST(16 * (2 + doc_id % 3) AS INT) AS height,
-       CAST(16 + doc_id % 10 AS INT) AS qp,
-       CAST(7 AS INT) AS n_frames,
-       CAST(4 AS INT) AS n_b_frames,
-       CAST(42 AS BIGINT) AS poc_sum,
-       TRUE AS yuv_bitexact,
-       TRUE AS iw_nontrivial,
-       TRUE AS skip_direct_used,
-       TRUE AS max_err_ok
-FROM documents WHERE doc_id < {H264_IBB_IDS}
-"""
-
-
-QUERIES["doc_h264_ibb_probe"] = QuerySpec(
-    q_h264_ibb_probe,
-    ORACLE_H264_IBB,
-    "H.264 IbbP + implicit weighted bi-prediction: POC-derived "
-    "weights, bit-exact round-trip",
 )
 
 

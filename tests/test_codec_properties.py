@@ -126,32 +126,34 @@ def test_decoders_never_crash_on_garbage(blob):
 
 @settings(max_examples=120, deadline=None)
 @given(data=st.data())
-def test_h264_decode_stream_never_crashes_on_garbage(data):
-    # decode_stream runs over untrusted blob columns: arbitrary bytes
+def test_h264_decode_iframe_never_crashes_on_garbage(data):
+    # decode_iframe runs over untrusted blob columns: arbitrary bytes
     # and bit-flipped valid streams may only raise the documented
     # exception family — never crash, hang, or allocation-bomb (a
     # forged SPS claiming huge dimensions is rejected at parse)
     import numpy as np
 
     from sparkstreaming_spark.multimodal.h264 import (
-        decode_stream,
-        encode_gop,
+        decode_iframe,
+        encode_iframe,
     )
 
     mode = data.draw(st.sampled_from(["raw", "prefixed", "mutated"]))
     if mode == "mutated":
-        base = bytearray(encode_gop(
-            [np.full((32, 32), 128, np.uint8),
-             np.full((32, 32), 131, np.uint8)], qp=20))
-        i = data.draw(st.integers(0, len(base) - 1))
-        base[i] ^= data.draw(st.integers(1, 255))
+        i = np.arange(32).reshape(-1, 1, 1)
+        j = np.arange(32).reshape(1, -1, 1)
+        k = np.arange(3).reshape(1, 1, -1)
+        img = ((40 + 3 * i + 2 * j + 50 * k + (i * j) % 17) % 256)
+        base = bytearray(encode_iframe(img.astype(np.uint8), qp=20))
+        pos = data.draw(st.integers(0, len(base) - 1))
+        base[pos] ^= data.draw(st.integers(1, 255))
         blob = bytes(base)
     else:
         blob = data.draw(st.binary(min_size=0, max_size=160))
         if mode == "prefixed":
             blob = b"\x00\x00\x01\x67" + blob
     try:
-        out = decode_stream(blob)
+        out = decode_iframe(blob)
         assert out["width"] <= 8192 and out["height"] <= 8192
     except (ValueError, NotImplementedError):
         pass

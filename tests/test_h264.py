@@ -567,27 +567,23 @@ def test_i16_random_texture_still_prefers_i4():
     assert np.array_equal(out["luma"], encoder_reconstruction(img, qp=20))
 
 
-def test_i16_color_roundtrip_in_gop():
-    # an I_16x16-heavy smooth color I frame followed by P frames: the
-    # decode_stream path (i16_counts) agrees and all planes round-trip
+def test_i16_color_roundtrip_iframe():
+    # a smooth color I frame takes I_16x16 macroblocks, and all three
+    # decoded planes equal the encoder's own reconstruction
     from sparkstreaming_spark.multimodal.h264 import (
-        decode_stream,
-        encode_gop,
-        gop_reconstruction_yuv,
+        encoder_reconstruction_yuv,
     )
 
     i = np.arange(32).reshape(-1, 1, 1)
     j = np.arange(48).reshape(1, -1, 1)
     k = np.arange(3).reshape(1, 1, -1)
     img = (50 + 2 * i + j + 20 * k).astype(np.uint8)
-    frames = [np.roll(img, 2 * t, axis=1) for t in range(3)]
-    out = decode_stream(encode_gop(frames, qp=18))
-    recons, _ = gop_reconstruction_yuv(frames, qp=18)
-    assert out["i16_counts"] and out["i16_counts"][0] > 0
-    for m in range(len(frames)):
-        assert np.array_equal(out["frames"][m], recons[m][0]), m
-        assert np.array_equal(out["frames_cb"][m], recons[m][1]), m
-        assert np.array_equal(out["frames_cr"][m], recons[m][2]), m
+    out = decode_iframe(encode_iframe(img, qp=18))
+    luma, cb, cr = encoder_reconstruction_yuv(img, qp=18)
+    assert out["n_i16_mbs"] > 0
+    assert np.array_equal(out["luma"], luma)
+    assert np.array_equal(out["cb"], cb)
+    assert np.array_equal(out["cr"], cr)
 
 
 def test_invalid_mb_type_raises():
@@ -614,6 +610,50 @@ def test_invalid_mb_type_raises():
     from sparkstreaming_spark.multimodal.h264 import decode_iframe
     with pytest.raises(ValueError, match="invalid I mb_type"):
         decode_iframe(stream)
+
+
+def test_directional_mode_without_samples_raises_not_silently_dc():
+    # craft an I slice whose FIRST 4x4 block (no top/left neighbors)
+    # codes an explicit rem=2: with DC predicted, rem 2 decodes to
+    # diagonal-down-left (§8.3.1.1), which needs the unavailable top
+    # row — the decoder must raise on the malformed stream, never
+    # quietly substitute DC
+    from sparkstreaming_spark.multimodal.h264 import (
+        _build_pps_rbsp,
+        _build_sps_rbsp,
+        _nal,
+    )
+
+    w = BitWriter()
+    w.ue(0)   # first_mb_in_slice
+    w.ue(7)   # slice_type I
+    w.ue(0)   # pps id
+    w.u(0, 4)  # frame_num
+    w.ue(0)   # idr_pic_id
+    w.u(0, 2)  # dec_ref_pic_marking
+    w.se(20 - 26)
+    w.ue(1)   # deblocking off
+    w.ue(0)   # mb_type I_4x4
+    w.u(0, 1)  # prev_intra4x4_pred_mode_flag = 0 -> explicit
+    w.u(2, 3)  # rem_intra4x4_pred_mode = 2 -> mode 3 (DDL, needs top)
+    for _ in range(15):
+        w.u(1, 1)  # remaining blocks: predicted mode
+    w.ue(0)   # intra_chroma_pred_mode DC
+    w.ue(3)   # CBP codeNum 3 -> cbp 0 (no residuals follow)
+    w.se(0)   # mb_qp_delta
+    stream = (_nal(7, _build_sps_rbsp(16, 16)) + _nal(8, _build_pps_rbsp())
+              + _nal(5, w.rbsp()))
+    with pytest.raises(ValueError, match="unavailable"):
+        decode_iframe(stream)
+
+
+def test_decode_iframe_reads_first_frame_of_multi_frame_stream():
+    rng = np.random.default_rng(5)
+    base = rng.integers(0, 256, (32, 32)).astype(np.uint8)
+    stream = (encode_iframe(base, qp=20)
+              + encode_iframe(np.roll(base, 1, axis=0), qp=20))
+    out = decode_iframe(stream)
+    assert np.array_equal(out["luma"], encoder_reconstruction(base, qp=20))
 
 
 def test_i16_dc_rich_content_reconstructs_exactly_at_low_qp():

@@ -104,13 +104,7 @@ CRITICAL_NEVER_SAMPLED = [
     "doc_unigram_encode",
     "doc_line_dedup",
     "stream_lm_gate",
-    "doc_h264_gop_probe",
-    "doc_h264_bframe_probe",
     # round-8 additions with the most algorithmic surface
-    "doc_h264_multiref_probe",
-    "doc_h264_i16_probe",
-    "doc_h264_bwpred_probe",
-    "doc_h264_ibb_probe",
     "doc_chat_template",
     "doc_dpo_pairs",
     "stream_neardup_gate",

@@ -7,13 +7,15 @@ from __future__ import annotations
 import os
 import sqlite3
 import tempfile
+from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkstreaming_spark.operators.relational import split_segments
-from sparkstreaming_spark.sinks.upsert import UpsertSink
+from sparkstreaming_spark.sinks.upsert import UpsertSink, upsert_partition
 from sparkstreaming_spark.sources.batch import read_table
 from sparkstreaming_spark.streaming.pipeline import (
     StreamingAggSpec,
@@ -21,7 +23,11 @@ from sparkstreaming_spark.streaming.pipeline import (
     run_available_now,
     start_kpi_queries,
 )
-from sparkstreaming_spark.streaming.producer import produce_segments
+from sparkstreaming_spark.streaming import producer
+from sparkstreaming_spark.streaming.producer import (
+    pace_segments,
+    produce_segments,
+)
 from sparkstreaming_spark.streaming.reconstitution import reconstitute_text
 from tests.conftest import SF_DIR_SMOKE
 
@@ -112,6 +118,59 @@ def test_upsert_idempotent(spark):
     con = sqlite3.connect(db)
     assert sorted(con.execute("SELECT k, v FROM t").fetchall()) == [("a", 1), ("b", 2)]
     con.close()
+
+
+def test_upsert_quotes_identifiers(tmp_path):
+    """Column names are the reference's CSV headers, spaces included
+    (`Type of Travel`, Consumer.scala:22-46): the sink must quote them,
+    and the second upsert of a key must overwrite the first."""
+    db = str(tmp_path / "q.db")
+    sink = UpsertSink(
+        connect=lambda: sqlite3.connect(db),
+        table="kpi by travel",
+        key_cols=["Type of Travel"],
+        val_cols=['say "cnt"'],
+    )
+    con = sqlite3.connect(db)
+    con.execute(sink.create_table_sql(
+        {"Type of Travel": "TEXT", 'say "cnt"': "INTEGER"}))
+    con.commit()
+    con.close()
+    for cnt in (1, 5):
+        row = Row(**{"Type of Travel": "Business travel", 'say "cnt"': cnt})
+        upsert_partition(iter([row]), sink.connect, sink.table,
+                         sink.key_cols, sink.val_cols)
+    con = sqlite3.connect(db)
+    got = con.execute('SELECT * FROM "kpi by travel"').fetchall()
+    con.close()
+    assert got == [("Business travel", 5)]
+
+
+def test_pace_segments_moves_files_in_numeric_order(tmp_path, monkeypatch):
+    """Each staged CSV lands in the watched directory unchanged, by
+    rename (nothing left behind to be half-copied), segment 2 before
+    segment 10."""
+    staged, watch = tmp_path / "staged", tmp_path / "watch"
+    want = {}
+    for seg in (10, 1, 2):
+        d = staged / f"segment={seg}"
+        d.mkdir(parents=True)
+        body = "".join(f"{seg},{i}\n" for i in range(3))
+        (d / "part-0.csv").write_text(body)
+        (d / ".part-0.csv.crc").write_text("crc")
+        want[f"segment_{seg}_part-0.csv"] = body
+    landed_before_sleep = []
+    monkeypatch.setattr(producer, "time", SimpleNamespace(
+        sleep=lambda _s: landed_before_sleep.append(sorted(os.listdir(watch)))))
+
+    assert pace_segments(str(staged), str(watch), sleep_sec=0) == 3
+
+    assert {f: (watch / f).read_text() for f in os.listdir(watch)} == want
+    assert not list(staged.glob("*/*.csv"))
+    assert landed_before_sleep == [
+        ["segment_1_part-0.csv"],
+        ["segment_1_part-0.csv", "segment_2_part-0.csv"],
+    ]
 
 
 def test_producer_segments_partition_input(spark):

@@ -32,6 +32,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -41,11 +42,15 @@ class Worker:
         self.name = name
         env = dict(os.environ)
         env["AB_EXTRA_CONF"] = json.dumps(extra_conf or {})
+        # stderr goes to a file, not a pipe: a pipe nobody drains fills
+        # and blocks the worker, and the file keeps a dead worker's
+        # traceback for the error message
+        self.err = tempfile.TemporaryFile(mode="w+")
         self.proc = subprocess.Popen(
             [sys.executable, os.path.join(REPO, "tools", "ab_worker.py"), repo],
             stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
+            stderr=self.err,
             text=True,
             env=env,
         )
@@ -56,10 +61,21 @@ class Worker:
         while True:
             resp = self.proc.stdout.readline()
             if not resp:
-                raise RuntimeError(f"worker {self.name} died on {line!r}")
+                raise RuntimeError(
+                    f"worker {self.name} died on {line!r}; stderr tail:\n"
+                    + self._stderr_tail()
+                )
             resp = resp.strip()
             if resp:
                 return resp
+
+    def _stderr_tail(self) -> str:
+        try:
+            self.proc.wait(timeout=10)
+        except subprocess.TimeoutExpired:
+            pass
+        self.err.seek(0)
+        return "\n".join(self.err.read().splitlines()[-20:])
 
     def ping(self) -> None:
         assert self._cmd("PING") == "PONG"
@@ -74,6 +90,7 @@ class Worker:
             self.proc.wait(timeout=60)
         except Exception:
             self.proc.kill()
+        self.err.close()
 
 
 def ensure_worktree(rev: str) -> str:

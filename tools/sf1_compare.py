@@ -14,8 +14,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def fam(name: str) -> str:
-    for p in ("streamck", "stream", "doc_h264", "doc_image", "doc_audio",
-              "doc", "emb", "evt", "tpch", "graph", "ts", "geo", "src",
+    for p in ("streamck", "stream", "doc_image", "doc_audio", "doc",
+              "emb", "evt", "tpch", "graph", "ts", "geo", "src",
               "kpi", "cdc", "scd2", "ord", "rev", "basket", "udf", "join",
               "layout", "fuzzy"):
         if name.startswith(p):
