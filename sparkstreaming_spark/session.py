@@ -33,26 +33,6 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def _state_store_provider() -> str | None:
-    """Session default for the streaming state store (SURVEY §4: RocksDB
-    is the at-scale config — state lives off-heap/on-disk per executor
-    instead of in JVM heap, so stateful operators survive key counts
-    that would OOM the default HDFSBackedStateStoreProvider). Flag:
-    SPARKSTREAMING_STATE_PROVIDER=rocksdb (default) | hdfs (Spark's
-    built-in heap-backed provider, for A/B or debugging)."""
-    flag = os.environ.get("SPARKSTREAMING_STATE_PROVIDER", "rocksdb").lower()
-    if flag in ("hdfs", "default", "heap"):
-        return None
-    if flag != "rocksdb":
-        # A typo'd opt-out silently running RocksDB would make an A/B
-        # compare a provider against itself — fail loudly instead.
-        raise ValueError(
-            f"SPARKSTREAMING_STATE_PROVIDER={flag!r}: expected 'rocksdb' "
-            "or one of 'hdfs'/'default'/'heap'"
-        )
-    return ROCKSDB_PROVIDER
-
-
 def get_spark(
     app_name: str = "sparkstreaming_spark",
     master: str | None = None,
@@ -87,32 +67,30 @@ def get_spark(
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    provider = _state_store_provider()
-    if provider:
-        builder = (
-            builder.config(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-            # Changelog checkpointing: commit writes only the batch's delta
-            # to the checkpoint; full RocksDB snapshots move to background
-            # maintenance. Without it every micro-batch pays a full
-            # snapshot upload — measured 1.5-4x per-batch overhead on the
-            # stream suite at sf0.1, and at 100 TB state it is the
-            # difference between O(delta) and O(state) per commit.
-            .config(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                "true",
-            )
-            # Row-count tracking makes every put/delete do a read-back get
-            # purely for the numRowsTotal metric; disable on the hot path.
-            .config(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "trackTotalNumberOfRows",
-                "false",
-            )
+        # RocksDB state store (SURVEY §4: the at-scale config — state lives
+        # off-heap/on-disk per executor instead of in JVM heap, so stateful
+        # operators survive key counts that would OOM Spark's heap-backed
+        # default provider).
+        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+        # Changelog checkpointing: commit writes only the batch's delta
+        # to the checkpoint; full RocksDB snapshots move to background
+        # maintenance. Without it every micro-batch pays a full
+        # snapshot upload — measured 1.5-4x per-batch overhead on the
+        # stream suite at sf0.1, and at 100 TB state it is the
+        # difference between O(delta) and O(state) per commit.
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled",
+            "true",
         )
+        # Row-count tracking makes every put/delete do a read-back get
+        # purely for the numRowsTotal metric; disable on the hot path.
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb."
+            "trackTotalNumberOfRows",
+            "false",
+        )
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -24,6 +24,7 @@ config, not code changes.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -136,18 +137,25 @@ def run_available_now(
     as a batch DataFrame — the test/correctness harness for every
     streaming operator.
 
+    The drain leaves nothing behind in the session: the memory sink's
+    view is dropped once the result frame holds its plan, and a
+    checkpoint dir made here (no `checkpoint_base`) is removed once the
+    query has stopped. A caller-given `checkpoint_base` is the caller's
+    to keep.
+
     `state_partitions` overrides the scoped state-partition default for
     queries whose state cardinality is known to the caller (see
     stream_state_partitions: size to state, not CPUs)."""
     spark = stream_df.sparkSession
     name = query_name or f"run_{uuid.uuid4().hex[:8]}"
     plan = transform(stream_df) if transform else stream_df
+    ckpt = _checkpoint_dir(checkpoint_base, name)
     with stream_state_partitions(spark, state_partitions):
         q = (
             plan.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(checkpoint_base, name))
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -156,4 +164,8 @@ def run_available_now(
         finally:
             if q.isActive:
                 q.stop()
-    return spark.table(name)
+            if checkpoint_base is None:
+                shutil.rmtree(ckpt, ignore_errors=True)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result

@@ -1,10 +1,10 @@
-"""The bench regression surface must equal the registry: every
-`queries()` entry is timed per-round (BENCH_DETAIL.json), so a perf
-regression in any operator is visible to the driver. Round 8's silent
-cap (78 unbenched queries) must not regrow."""
+"""The bench sweep must cover the whole registry: every `queries()` entry
+gets a row in BENCH_DETAIL.json, so a perf regression in any operator is
+visible. Round 8's silent cap (78 unbenched queries) must not regrow."""
 
 import importlib.util
 import os
+from types import SimpleNamespace
 
 
 def _load_bench():
@@ -15,25 +15,54 @@ def _load_bench():
     return mod
 
 
-def test_headline_covers_full_registry():
+def _stub_pass(monkeypatch, bench, failing=()):
+    """Replace perfbench's pass and probes: every query takes 2 s to build,
+    2 s to write and 2 s to collect; a name in `failing` raises."""
+
+    def one_pass(spark, reg, names, sf_dir, tracer, trace, group):
+        assert trace and names[0] in reg
+        if names[0] in failing:
+            return {"failed": 1, "errors": [f"{names[0]}: ValueError: boom"]}
+        return {"failed": 0, **{k: {names[0]: 2.0} for k in ("build", "exec", "collect")}}
+
+    class Plans:
+        def __init__(self, spark):
+            pass
+
+        def take(self):
+            return dict.fromkeys(bench.probe.PLAN_METRICS, 0.0)
+
+    monkeypatch.setattr(bench.batch, "one_pass", one_pass)
+    monkeypatch.setattr(bench.probe, "PlanMetrics", Plans)
+    monkeypatch.setattr(bench.probe, "job_counts", lambda sc, group: (1, 2, 3))
+
+
+def test_sweep_rows_equal_the_registry(monkeypatch):
+    """`sweep` walks the registry itself, so it covers every query by
+    construction; a stubbed pass shows each row's fields."""
     from sparkstreaming_spark.suite import all_queries
 
     bench = _load_bench()
-    missing = sorted(set(all_queries()) - set(bench.HEADLINE))
-    assert not missing, f"unbenched registry queries: {missing}"
+    registry = all_queries()
+    _stub_pass(monkeypatch, bench)
+    rows = bench.sweep(SimpleNamespace(sparkContext=None), registry, "sf")
+    assert list(rows) == list(registry)
+    row = rows[next(iter(registry))]
+    assert row["pass_s"] == 4.0 and row["runs"] == [4.0] * bench.RUNS_BASE
+    assert (row["build_s"], row["exec_s"], row["collect_s"]) == (2.0, 2.0, 2.0)
+    assert (row["spark.jobs"], row["spark.stages"], row["spark.tasks"]) == (1, 2, 3)
+    assert set(bench.probe.PLAN_METRICS) <= set(row)
 
 
-def test_headline_has_no_stale_names():
-    from sparkstreaming_spark.suite import all_queries
-
+def test_sweep_records_a_failing_query_and_goes_on(monkeypatch):
+    """A query that raises gets an `error` row, not a time, and the queries
+    after it are still timed."""
     bench = _load_bench()
-    stale = sorted(set(bench.HEADLINE) - set(all_queries()))
-    assert not stale, f"HEADLINE names not in registry: {stale}"
-
-
-def test_core_subset_is_benched():
-    bench = _load_bench()
-    assert set(bench.CORE) <= set(bench.HEADLINE)
+    registry = dict.fromkeys(["q_ok", "q_bad", "q_after"])
+    _stub_pass(monkeypatch, bench, failing={"q_bad"})
+    rows = bench.sweep(SimpleNamespace(sparkContext=None), registry, "sf")
+    assert rows["q_bad"] == {"error": "q_bad: ValueError: boom"}
+    assert rows["q_ok"]["pass_s"] == rows["q_after"]["pass_s"] == 4.0
 
 
 def test_adaptive_run_protocol_constants():

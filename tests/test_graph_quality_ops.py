@@ -74,25 +74,37 @@ def test_pagerank_iteration_has_partial_aggregate(spark):
 
 def test_pagerank_persisted_out_cleanup(spark):
     """Repeated pagerank calls in one session must not accumulate cached
-    blocks when the caller uses the persisted_out cleanup path: storage
-    returns to its baseline RDD count after each call's unpersist."""
+    blocks when the caller uses the persisted_out cleanup path: after each
+    call's unpersist, the handles' cached RDDs are gone and nothing the
+    call created is still persisted. (A strict count of persisted RDDs
+    would flake: earlier tests' lazy localCheckpoint RDDs can be garbage
+    collected mid-test.)"""
     from sparkstreaming_spark.operators.graph import pagerank
 
-    jsc = spark.sparkContext._jsc.sc()
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
-    baseline = len(jsc.getRDDStorageInfo())
+
+    def cached_rdd_id(df):
+        data = cache.lookupCachedData(df._jdf).get()
+        return data.cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
     )
     for _ in range(3):
+        high = max(jsc.getPersistentRDDs(), default=-1)
         handles = []
         result = pagerank(edges, iterations=2, persisted_out=handles).collect()
         assert len(result) == 3
         assert len(handles) == 3  # e0, deg, adj
+        ids = {cached_rdd_id(h) for h in handles}
+        assert len(ids) == 3 and min(ids) > high
         for h in handles:
             h.unpersist(blocking=True)
-        assert len(jsc.getRDDStorageInfo()) == baseline
+        persisted = set(jsc.getPersistentRDDs())
+        assert not ids & persisted
+        assert not {i for i in persisted if i > high}
 
 
 # ------------------------------------------------------------ tfidf cosine

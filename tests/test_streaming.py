@@ -246,6 +246,34 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert 100.0 not in values, "late row leaked past the watermark"
 
 
+def test_drains_leave_no_views_or_checkpoints(spark, tmp_path):
+    """Back-to-back drains leave the session catalog and the default
+    checkpoint root as they found them, and each result frame still
+    collects after its view and checkpoint are gone."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], "k string, v int") \
+        .coalesce(1).write.parquet(src)
+    root = os.path.join(tempfile.gettempdir(), "sparkstreaming_ckpt")
+
+    def own_ckpts():
+        names = os.listdir(root) if os.path.isdir(root) else []
+        return [n for n in names if n.startswith("leak_probe_")]
+
+    tables = sorted(t.name for t in spark.catalog.listTables())
+    outs = [
+        run_available_now(
+            spark.readStream.schema("k string, v int").parquet(src),
+            lambda df: df.groupBy("k").agg(F.sum("v").alias("s")),
+            query_name=f"leak_probe_{i}",
+        )
+        for i in range(3)
+    ]
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables
+    assert own_ckpts() == []
+    for out in outs:
+        assert {(r.k, r.s) for r in out.collect()} == {("a", 4), ("b", 2)}
+
+
 def test_append_text_file_guards_oversized_batch(spark, tmp_path):
     """The reconstitution sink is single-file/driver-bound by contract;
     a batch above max_rows must fail loudly, not OOM the driver."""

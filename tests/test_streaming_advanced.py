@@ -88,17 +88,11 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
 
 
 def test_rocksdb_is_session_default(spark):
-    """The session factory must set RocksDB as the state store provider
-    (SURVEY §4's at-scale backend) unless the flag opts out — so every
-    stateful streaming test in this suite already runs under it."""
-    import os
-
+    """The session factory sets RocksDB as the state store provider
+    (SURVEY §4's at-scale backend), so every stateful streaming test in
+    this suite already runs under it."""
     from sparkstreaming_spark.session import ROCKSDB_PROVIDER
 
-    if os.environ.get("SPARKSTREAMING_STATE_PROVIDER", "rocksdb").lower() in (
-        "hdfs", "default", "heap"
-    ):  # pragma: no cover - opt-out escape hatch
-        return
     assert (
         spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         == ROCKSDB_PROVIDER

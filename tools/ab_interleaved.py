@@ -17,7 +17,9 @@ Usage:
       --queries q1,q2                       # config A/B, same code both arms
 
 Arms: A = this checkout (HEAD). B = `git worktree` of --ref, or this
-checkout with --conf-b extra session confs. Speedup reported is
+checkout with --conf-b extra session confs. Both arms time each run with
+this checkout's pass (`perfbench.batch.one_pass`, see ab_worker.py), so
+a --ref older than perfbench/ is timed the same way. Speedup reported is
 median_B / median_A (>1 means arm A / HEAD is faster).
 
 Runs are strictly serialized across arms (one query executing at a
@@ -35,6 +37,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from perfbench import probe  # noqa: E402
 
 
 class Worker:
@@ -125,7 +130,7 @@ def main() -> None:
     repo_b = ensure_worktree(args.ref) if args.ref else REPO
     conf_a = json.loads(args.conf_a) if args.conf_a else None
     conf_b = json.loads(args.conf_b) if args.conf_b else None
-    load0 = round(os.getloadavg()[0], 1)
+    steal0 = probe.host_steal_s()
 
     a = Worker("A(head)", repo_a, conf_a)
     b = Worker("B(ref)", repo_b, conf_b)
@@ -178,7 +183,7 @@ def main() -> None:
             f" conf={args.conf_b}" if args.conf_b else ""
         ),
         "runs": args.runs,
-        "host_load_1min": [load0, round(os.getloadavg()[0], 1)],
+        "host_steal_s": round(probe.host_steal_s() - steal0, 2),
         "results": results,
     }
     print(json.dumps(payload, indent=1))

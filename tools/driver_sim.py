@@ -58,7 +58,7 @@ for name, fn in sorted(qs.items()):
     else:
         print(f"rows-only {name}: {len(spdf)} rows")
     # drop frames queries cached: without this the 300+-query session
-    # accumulates memory pressure (same fix as bench.py / sf1_bench.py)
+    # accumulates memory pressure (perfbench's pass clears them the same way)
     spark.catalog.clearCache()
 print("FAILURES:", fails)
 sys.exit(1 if fails else 0)

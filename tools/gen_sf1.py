@@ -1,6 +1,6 @@
 """True-sf1 generator: a GENUINE 10x-of-sf0.1 dataset with fresh ids and
-fresh content, NOT replication. The 10x stress corpus (tools/stress.py)
-replicates every document 10x, which inflates document-frequency
+fresh content, NOT replication. Replicating every document 10x
+inflates document-frequency
 statistics (shingle df, token df, idf) in a way real corpora don't —
 BASELINE.md flags doc_tfidf_cosine's 10x row as distorted by it. This
 generator re-runs the same statistical PROCESS the driver testdata
