@@ -52,13 +52,14 @@ def ngram_jaccard_pairs(
     pays the tokenize pass once."""
     from .minhash import _explode_shingles, _shingle_sets
 
+    # toks_df has one row per doc: count it instead of the raw corpus
+    max_doc_freq = _resolve_doc_freq_cap(df if toks_df is None else toks_df, max_doc_freq)
     # materialize the exploded shingles once (lazy localCheckpoint, so
     # the blocks are GC-reclaimed instead of CacheManager-pinned): they
     # feed the doc-frequency pass (when capping), the per-doc sizes, and
     # BOTH sides of the self-join — without it Spark re-runs the
     # tokenize+shingle+hash projection per consumer (~1.6x wall-clock
     # measured at sf0.1)
-    max_doc_freq = _resolve_doc_freq_cap(df, max_doc_freq)
     sh = _explode_shingles(
         _shingle_sets(df, id_col, text_col, shingle_n, toks_df=toks_df)
     ).localCheckpoint(eager=False)

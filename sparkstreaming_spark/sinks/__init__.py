@@ -1,4 +1,4 @@
-from .upsert import UpsertSink, upsert_partition
+from .upsert import UpsertSink
 from .files import write_csv_segments, append_text_file
 
-__all__ = ["UpsertSink", "append_text_file", "upsert_partition", "write_csv_segments"]
+__all__ = ["UpsertSink", "append_text_file", "write_csv_segments"]

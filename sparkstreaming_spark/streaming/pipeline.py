@@ -1,24 +1,42 @@
-"""Streaming KPI pipeline: N concurrent update-mode aggregations over one
-source, each feeding an idempotent sink — the declarative re-expression of
-the reference's Consumer (Consumer.scala:49-107).
+"""Streaming KPI pipeline: every KPI over one source as ONE stateless
+micro-batch query, its per-batch deltas added into idempotent sinks — the
+declarative re-expression of the reference's Consumer
+(Consumer.scala:49-107).
+
+The reference starts one update-mode query per KPI, so each KPI re-reads
+the source and keeps its own aggregation state. Here the sink tables ARE
+the state (Structured Streaming, SIGMOD 2018: exactly-once = a replayable
+source + a sink idempotent per batch id):
+
+- one append-mode query per source; its `foreachBatch` computes every
+  spec's per-batch delta in one Spark action (`groupingSets` over the
+  specs' key sets, each spec's aggregates aliased apart, told apart by
+  `grouping_id()`), brings the small result to the driver once and hands
+  each spec's rows to `sink_factory(spec)` as a local DataFrame;
+- the sink adds the delta to the stored values and records the batch id
+  in the same transaction (sinks/upsert.py), so a batch replayed after a
+  crash is skipped and the table equals the aggregate over all input;
+- there is no state store, so no per-batch state commit.
+
+That works only for aggregates that add across batches: `count`, `sum`,
+and `+`/`-`/cast combinations of them. `start_kpi_queries` checks each
+spec's analyzed plan and refuses anything else (`avg`, `min`, `max`,
+distinct counts) before a query starts. The delta is rolled up on the
+driver, which suits the reference's low-cardinality KPIs; a micro-batch
+whose delta exceeds `MAX_DELTA_ROWS` fails the query. High-cardinality
+keys belong to a windowed aggregate with a watermark, drained through
+`run_available_now` (as `q_stream_chained_windows` in
+suite/streaming_suite.py does).
 
 Deltas from the reference (SURVEY §2.9):
-- checkpointLocation is MANDATORY per query (T7 fix; the reference has
-  none, so a crash replays the whole directory),
-- queries are awaited with `awaitAnyTermination` semantics rather than
-  the reference's sequential `awaitTermination()` chain (T6 fix),
+- checkpointLocation is MANDATORY (T7 fix; the reference has none, so a
+  crash replays the whole directory); under a caller's
+  `checkpoint_base` it is a fixed path, so a restart resumes;
 - aggregation specs are data, not code: one `StreamingAggSpec` per KPI
-  replaces a hand-written function per KPI,
-- tests run with `trigger(availableNow=True)` + memory sink and assert
-  streaming results == the batch plan on the same input (the Structured
-  Streaming equivalence invariant, SURVEY §5.2).
-
-State at scale (T3/T4): unwindowed update-mode aggregates keep one state
-row per group key forever. Keys here are low-cardinality by design; for
-high-cardinality keys use the event-time windowed ops (suite/events.py)
-with watermarks, and configure the RocksDB state store provider
-(spark.sql.streaming.stateStore.providerClass) — both documented engine
-config, not code changes.
+  replaces a hand-written function per KPI;
+- tests run with `trigger(availableNow=True)` and assert the sink tables
+  == the batch plan on the same input (the Structured Streaming
+  equivalence invariant, SURVEY §5.2).
 """
 
 from __future__ import annotations
@@ -31,7 +49,9 @@ from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 STREAM_PARTITIONS_ENV = "SPARKSTREAMING_STREAM_PARTITIONS"
@@ -67,17 +87,98 @@ def stream_state_partitions(spark: SparkSession, n: int | None = None):
         spark.conf.set(key, prev)
 
 
+# Most rows one micro-batch's KPI delta may hold, over all specs: the
+# delta is collected to the driver.
+MAX_DELTA_ROWS = 100_000
+
+# Aggregates whose per-batch values add up to the value over all batches,
+# and the expressions that keep that true when they combine them.
+_ADDITIVE_AGGS = {"Count", "Sum"}
+_LINEAR = {"Alias", "Cast", "Add", "Subtract", "UnaryMinus"}
+_GID = "_gid"
+
+
 @dataclass
 class StreamingAggSpec:
-    """One streaming KPI: group keys + aggregate expressions + a name."""
+    """One streaming KPI: group keys + additive aggregates + a name."""
 
     name: str
     group_cols: list[str]
     aggs: Callable[[], list]  # thunk returning Column list (Columns aren't reusable)
-    output_mode: str = "update"
 
-    def apply(self, stream_df: DataFrame) -> DataFrame:
-        return stream_df.groupBy(*self.group_cols).agg(*self.aggs())
+    def apply(self, df: DataFrame) -> DataFrame:
+        return df.groupBy(*map(_col, self.group_cols)).agg(*self.aggs())
+
+
+def _col(name: str):
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _non_additive(expr) -> str | None:
+    """SQL of the first part of an analyzed aggregate output expression
+    that does not add across micro-batches, or None."""
+    kind = expr.getClass().getSimpleName()
+    if kind == "AggregateExpression":
+        fn = expr.aggregateFunction().getClass().getSimpleName()
+        return None if fn in _ADDITIVE_AGGS and not expr.isDistinct() else expr.sql()
+    if kind not in _LINEAR:
+        return expr.sql()
+    kids = expr.children()
+    return next(filter(None, (_non_additive(kids.apply(i)) for i in range(kids.size()))),
+                None)
+
+
+def _value_cols(stream_df: DataFrame, spec: StreamingAggSpec) -> list[str]:
+    """The spec's aggregate column names; raises ValueError if one of
+    them is not additive."""
+    agg = spec.apply(stream_df)
+    exprs = agg._jdf.queryExecution().analyzed().aggregateExpressions()
+    for i in range(len(spec.group_cols), exprs.size()):
+        bad = _non_additive(exprs.apply(i))
+        if bad:
+            raise ValueError(
+                f"{spec.name}: {bad} does not add across micro-batches; "
+                "start_kpi_queries takes count, sum and +/-/cast of them"
+            )
+    return agg.columns[len(spec.group_cols):]
+
+
+@dataclass
+class _KpiBatch:
+    """foreachBatch body of start_kpi_queries: every spec's delta in one
+    Spark action, then each spec's rows to its sink."""
+
+    specs: list[StreamingAggSpec]
+    value_cols: list[list[str]]
+    sinks: list[Callable]
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        keys = list(dict.fromkeys(c for s in self.specs for c in s.group_cols))
+        sets = list(dict.fromkeys(tuple(s.group_cols) for s in self.specs))
+        aggs = [c.alias(f"_{i}_{j}") for i, s in enumerate(self.specs)
+                for j, c in enumerate(s.aggs())]
+        delta = (
+            batch_df.groupingSets([list(map(_col, g)) for g in sets], *map(_col, keys))
+            .agg(*aggs, F.grouping_id().alias(_GID))
+            .toArrow()
+        )
+        if delta.num_rows > MAX_DELTA_ROWS:
+            raise ValueError(
+                f"micro-batch {batch_id}: {delta.num_rows} KPI delta rows exceed "
+                f"MAX_DELTA_ROWS={MAX_DELTA_ROWS}; start_kpi_queries rolls KPIs up "
+                "on the driver, so high-cardinality keys belong to a windowed "
+                "aggregate with a watermark (run_available_now)"
+            )
+        spark = batch_df.sparkSession
+        for i, (spec, names, sink) in enumerate(zip(self.specs, self.value_cols, self.sinks)):
+            gid = sum(1 << (len(keys) - 1 - p) for p, c in enumerate(keys)
+                      if c not in spec.group_cols)
+            rows = (
+                delta.filter(pc.equal(delta[_GID], gid))
+                .select(spec.group_cols + [f"_{i}_{j}" for j in range(len(names))])
+                .rename_columns(spec.group_cols + names)
+            )
+            sink(spark.createDataFrame(rows), batch_id)
 
 
 def _checkpoint_dir(base: str | None, name: str) -> str:
@@ -93,29 +194,29 @@ def start_kpi_queries(
     trigger_available_now: bool = False,
     processing_time: str | None = None,
 ) -> list[StreamingQuery]:
-    """Start one StreamingQuery per spec over a shared source DF —
-    the reference's 5-concurrent-query topology (Consumer.scala:60-100),
-    parameterized. `sink_factory(spec)` returns the foreachBatch callable
-    (e.g. sinks.UpsertSink keyed on the spec's group columns)."""
-    queries = []
-    with stream_state_partitions(stream_df.sparkSession):
-        for spec in specs:
-            writer = (
-                spec.apply(stream_df)
-                .writeStream.outputMode(spec.output_mode)
-                .queryName(spec.name)
-                .option(
-                    "checkpointLocation",
-                    _checkpoint_dir(checkpoint_base, spec.name),
-                )
-                .foreachBatch(sink_factory(spec))
-            )
-            if trigger_available_now:
-                writer = writer.trigger(availableNow=True)
-            elif processing_time:
-                writer = writer.trigger(processingTime=processing_time)
-            queries.append(writer.start())
-    return queries
+    """Start ONE stateless append-mode query over `stream_df` that feeds
+    every spec (the reference's 5-concurrent-query topology,
+    Consumer.scala:60-100, fused) and return it in a list.
+    `sink_factory(spec)` returns the callable that receives each
+    micro-batch's delta for that spec as `(df, batch_id)` and must add it
+    idempotently per batch id (sinks.UpsertSink keyed on the spec's group
+    columns). Raises ValueError before starting if a spec's aggregate
+    does not add across batches."""
+    value_cols = [_value_cols(stream_df, s) for s in specs]
+    name = "+".join(s.name for s in specs)
+    ckpt = (os.path.join(checkpoint_base, name) if checkpoint_base
+            else _checkpoint_dir(None, name))
+    writer = (
+        stream_df.writeStream.outputMode("append")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(_KpiBatch(specs, value_cols, [sink_factory(s) for s in specs]))
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return [writer.start()]
 
 
 def await_all(queries: list[StreamingQuery], timeout_sec: float | None = None) -> None:

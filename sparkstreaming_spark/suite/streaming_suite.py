@@ -23,7 +23,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sinks.upsert import UpsertSink
-from ..streaming.pipeline import run_available_now, stream_state_partitions
+from ..streaming.pipeline import (
+    StreamingAggSpec,
+    run_available_now,
+    start_kpi_queries,
+    stream_state_partitions,
+)
 from ..streaming.producer import produce_segments
 from . import QuerySpec
 from .events import ORACLE_SESSION as _ORACLE_SESSION
@@ -106,40 +111,38 @@ def q_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K1+K2 end to end: update-mode counts → foreachBatch → batched
-    idempotent upsert into a relational store (sqlite as the portable
-    stand-in for the reference's MySQL), then the table read back."""
-    db_path = os.path.join(tempfile.mkdtemp(prefix="upsert_sink_"), "kpi.db")
-    sink = UpsertSink(
-        connect=lambda: sqlite3.connect(db_path),
-        table="kpi_status_counts",
-        key_cols=["o_orderstatus"],
-        val_cols=["cnt"],
+    """K1+K2 end to end: the KPI pipeline's one stateless query →
+    foreachBatch → additive upsert, idempotent per batch id, into a
+    relational store (sqlite as the portable stand-in for the reference's
+    MySQL), then the table read back."""
+    spec = StreamingAggSpec(
+        "kpi_status_counts", ["o_orderstatus"], lambda: [F.count(F.lit(1)).alias("cnt")]
     )
-    con = sqlite3.connect(db_path)
-    con.execute(sink.create_table_sql({"o_orderstatus": "TEXT", "cnt": "INTEGER"}))
-    con.commit()
-    con.close()
-
-    stream = _orders_stream(spark, sf_dir)
-    with stream_state_partitions(spark):
-        q = (
-            stream.groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .writeStream.outputMode("update")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.mkdtemp(prefix="upsert_ckpt_"), "q"),
-            )
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="upsert_sink_") as tmp:
+        db_path = os.path.join(tmp, "kpi.db")
+        sink = UpsertSink(
+            connect=lambda: sqlite3.connect(db_path),
+            table=spec.name,
+            key_cols=spec.group_cols,
+            val_cols=["cnt"],
         )
-        q.awaitTermination(300)
+        con = sqlite3.connect(db_path)
+        con.execute(sink.create_table_sql({"o_orderstatus": "TEXT", "cnt": "INTEGER"}))
+        con.commit()
+        con.close()
 
-    con = sqlite3.connect(db_path)
-    rows = con.execute("SELECT o_orderstatus, cnt FROM kpi_status_counts").fetchall()
-    con.close()
+        (q,) = start_kpi_queries(
+            _orders_stream(spark, sf_dir), [spec], lambda _spec: sink,
+            checkpoint_base=os.path.join(tmp, "ckpt"), trigger_available_now=True,
+        )
+        try:
+            q.awaitTermination(300)
+        finally:
+            q.stop()
+
+        con = sqlite3.connect(db_path)
+        rows = con.execute("SELECT o_orderstatus, cnt FROM kpi_status_counts").fetchall()
+        con.close()
     return spark.createDataFrame(
         [(r[0], int(r[1])) for r in rows], "o_orderstatus string, cnt bigint"
     )

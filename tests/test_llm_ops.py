@@ -29,6 +29,21 @@ def test_minhash_recall_vs_exact(spark):
     assert exact <= mh, f"missed pairs: {exact - mh}"
 
 
+def test_ngram_doc_freq_cap_counts_shared_tokens_not_corpus(spark, monkeypatch):
+    """With a shared token frame, the "auto" doc-frequency cap counts
+    that frame (one row per doc), not the raw corpus again."""
+    from sparkstreaming_spark.dedup import ngram
+    from sparkstreaming_spark.dedup.minhash import token_arrays
+
+    d = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
+    toks = token_arrays(d, "doc_id", "text")
+    counted = []
+    monkeypatch.setattr(ngram, "_resolve_doc_freq_cap",
+                        lambda df, cap: counted.append(df) or 100)
+    ngram.ngram_jaccard_pairs(d, "doc_id", "text", toks_df=toks)
+    assert len(counted) == 1 and counted[0] is toks
+
+
 def test_lsh_knn_recall(spark):
     """Multi-table LSH ANN (3 planes x 16 tables) should recover >= 80% of
     the exact top-10 neighbors on the synthetic embeddings."""

@@ -15,8 +15,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkstreaming_spark.operators.relational import split_segments
-from sparkstreaming_spark.sinks.upsert import UpsertSink, upsert_partition
+from sparkstreaming_spark.sinks.upsert import UpsertSink
 from sparkstreaming_spark.sources.batch import read_table
+from sparkstreaming_spark.streaming import pipeline
 from sparkstreaming_spark.streaming.pipeline import (
     StreamingAggSpec,
     await_all,
@@ -51,8 +52,9 @@ def _orders_stream(spark, sf_dir):
 
 
 def test_multi_query_concurrency(spark):
-    """The reference's 5-concurrent-query topology (T6): N specs over one
-    source, each upserting its own table; all results must match batch."""
+    """The reference's concurrent KPI topology (T6), fused: N specs over
+    one source run as ONE stateless query, each spec adding into its own
+    table; every table must match the batch aggregate."""
     db = os.path.join(tempfile.mkdtemp(), "kpi.db")
     specs = [
         StreamingAggSpec(
@@ -123,7 +125,7 @@ def test_upsert_idempotent(spark):
 def test_upsert_quotes_identifiers(tmp_path):
     """Column names are the reference's CSV headers, spaces included
     (`Type of Travel`, Consumer.scala:22-46): the sink must quote them,
-    and the second upsert of a key must overwrite the first."""
+    and the second batch's value for a key must add to the first."""
     db = str(tmp_path / "q.db")
     sink = UpsertSink(
         connect=lambda: sqlite3.connect(db),
@@ -136,14 +138,12 @@ def test_upsert_quotes_identifiers(tmp_path):
         {"Type of Travel": "TEXT", 'say "cnt"': "INTEGER"}))
     con.commit()
     con.close()
-    for cnt in (1, 5):
-        row = Row(**{"Type of Travel": "Business travel", 'say "cnt"': cnt})
-        upsert_partition(iter([row]), sink.connect, sink.table,
-                         sink.key_cols, sink.val_cols)
+    for batch_id, cnt in enumerate((1, 5)):
+        assert sink.write([("Business travel", cnt)], batch_id)
     con = sqlite3.connect(db)
     got = con.execute('SELECT * FROM "kpi by travel"').fetchall()
     con.close()
-    assert got == [("Business travel", 5)]
+    assert got == [("Business travel", 6)]
 
 
 def test_pace_segments_moves_files_in_numeric_order(tmp_path, monkeypatch):

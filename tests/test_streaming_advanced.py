@@ -157,22 +157,25 @@ def test_streaming_topn_values_stateful_processor(spark):
 
 def test_checkpoint_restart_resumes_not_reprocesses(spark, tmp_path):
     """T7 end to end: drain files with availableNow + checkpoint, add MORE
-    files, restart the SAME query from the SAME checkpoint — the second
+    files, restart the KPI pipeline from the SAME checkpoint — the second
     run must process only the new files, and the upserted table must
     equal the batch aggregate over everything (exactly-once effect via
-    checkpoint replay + idempotent keyed upsert)."""
+    checkpoint replay + additive upsert idempotent per batch id)."""
     import os
     import sqlite3
 
-    from pyspark.sql import functions as F
-
     from sparkstreaming_spark.sinks.upsert import UpsertSink
+    from sparkstreaming_spark.streaming.pipeline import (
+        StreamingAggSpec,
+        start_kpi_queries,
+    )
 
     src = tmp_path / "src"
     src.mkdir()
     db = str(tmp_path / "kpi.db")
     ckpt = str(tmp_path / "ckpt")
 
+    spec = StreamingAggSpec("counts", ["k"], lambda: [F.count(F.lit(1)).alias("cnt")])
     sink = UpsertSink(
         connect=lambda: sqlite3.connect(db),
         table="counts",
@@ -194,15 +197,8 @@ def test_checkpoint_restart_resumes_not_reprocesses(spark, tmp_path):
             .schema("k string")
             .csv(str(src))
         )
-        q = (
-            stream.groupBy("k")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
+        (q,) = start_kpi_queries(stream, [spec], lambda _spec: sink,
+                                 checkpoint_base=ckpt, trigger_available_now=True)
         q.awaitTermination(120)
         return sum(p["numInputRows"] for p in q.recentProgress)
 
